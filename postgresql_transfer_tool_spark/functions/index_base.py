@@ -1,11 +1,15 @@
-"""Shared machinery for the persistent-index family (VERDICT r8 #7).
+"""One lifecycle for the persistent-index family.
 
 The three index modules — operators/dedup_index.py (near-dup),
 operators/contamination_index.py (benchmark grams), operators/
-ann_index.py (IVF cells) — share one lifecycle: a bucketed build, an
-append-only ``extend``, a probe that must never shuffle or rescan the
-index side, and a compaction/rewrite path. Round 8 duplicated the
-supporting hygiene in each module; this module is the single home for:
+ann_index.py (IVF cells) — declare their index as data: one
+:class:`IndexKind` each (format kind string, table schemas, bucketed
+tables, id column, the one per-kind compaction rule). Every mutator —
+format check, stamped append, delete, TTL expiry, compaction, merge —
+is written ONCE here against that spec; the modules keep only their
+signature kernels and probes. The 11 index-family registry rows are
+generated from one table (:data:`INDEX_ROWS`) through one composer
+(:func:`register_index_rows`). The supporting hygiene lives here too:
 
 - **append + refresh** (:func:`append_bucketed`): bucketed appends must
   refresh the relation cache through the CALLER's session, because
@@ -45,10 +49,17 @@ from __future__ import annotations
 
 import logging
 import os
+import tempfile
+from collections.abc import Callable
 from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import ClassVar, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .bucketing import index_table_name, write_bucketed
+from .memo import CheckpointMemo, unpersist_checkpoints
 
 logger = logging.getLogger(__name__)
 
@@ -558,12 +569,25 @@ def _side_name(any_index_table: str, kind: str) -> str:
     return f"{any_index_table.rsplit('_', 1)[0]}_{kind}"
 
 
-def _side_table(spark: SparkSession, any_index_table: str, kind: str) -> tuple[str, str]:
-    """(catalog name, path) — path resolution costs a DESC EXTENDED, so
-    probe-side readers use :func:`_side_name` alone."""
-    return _side_name(any_index_table, kind), os.path.join(
-        index_root(spark, any_index_table), kind
-    )
+def _append_side(
+    spark: SparkSession, any_index_table: str, kind: str, rows: DataFrame
+) -> str:
+    """Append ``rows`` to a side relation, creating it (one file, in the
+    index root) on first use. Returns the side table's catalog name;
+    the root's path is resolved (a DESC EXTENDED) only on creation."""
+    side = _side_name(any_index_table, kind)
+    if spark.catalog.tableExists(side):
+        rows.write.mode("append").format("parquet").saveAsTable(side)
+        spark.catalog.refreshTable(side)
+    else:
+        (
+            rows.coalesce(1)
+            .write.mode("overwrite")
+            .option("path", os.path.join(index_root(spark, any_index_table), kind))
+            .format("parquet")
+            .saveAsTable(side)
+        )
+    return side
 
 
 def add_tombstones(spark: SparkSession, any_index_table: str, ids: DataFrame) -> str:
@@ -572,23 +596,13 @@ def add_tombstones(spark: SparkSession, any_index_table: str, ids: DataFrame) ->
     probes anti-join it until a compaction folds it in. Returns the
     tombstone table name. ``ids``'s single column may have any name;
     it is normalized to ``id``."""
-    tomb, path = _side_table(spark, any_index_table, "tombstones")
+    tomb = _side_name(any_index_table, "tombstones")
     rows = ids.select(F.col(ids.columns[0]).cast("long").alias("id")).distinct()
-    if spark.catalog.tableExists(tomb):
-        rows = snapshot_before_write(rows.join(spark.table(tomb), "id", "left_anti"))
-        rows.write.mode("append").format("parquet").saveAsTable(tomb)
-        spark.catalog.refreshTable(tomb)
-        from .memo import unpersist_checkpoints
-
-        unpersist_checkpoints(rows)
-    else:
-        (
-            rows.coalesce(1)
-            .write.mode("overwrite")
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(tomb)
-        )
+    if not spark.catalog.tableExists(tomb):
+        return _append_side(spark, any_index_table, "tombstones", rows)
+    rows = snapshot_before_write(rows.join(spark.table(tomb), "id", "left_anti"))
+    _append_side(spark, any_index_table, "tombstones", rows)
+    unpersist_checkpoints(rows)
     return tomb
 
 
@@ -615,15 +629,6 @@ def apply_tombstones(
         key_col,
         "left_anti",
     )
-
-
-def drop_side_tables(spark: SparkSession, any_index_table: str) -> None:
-    """Drop the tombstone/stamp side relations unconditionally. Only
-    correct when the index itself is being torn down — compaction must
-    use :func:`fold_side_tables` instead (dropping the stamps ledger
-    would silently exempt every surviving row from future TTL expiry)."""
-    for kind in ("tombstones", "stamps"):
-        spark.sql(f"DROP TABLE IF EXISTS {_side_name(any_index_table, kind)}")
 
 
 def fold_side_tables(spark: SparkSession, any_index_table: str, new_path: str) -> None:
@@ -716,22 +721,10 @@ def record_stamps(
     clocks — deterministic under test and replay (a replayed epoch
     re-records the same stamp, and the duplicate row is harmless
     because expiry reads MAX(stamp) per id)."""
-    stamps, path = _side_table(spark, any_index_table, "stamps")
     rows = ids.select(
         F.col(ids.columns[0]).cast("long").alias("id"), F.lit(stamp).alias("stamp")
     )
-    if spark.catalog.tableExists(stamps):
-        rows.write.mode("append").format("parquet").saveAsTable(stamps)
-        spark.catalog.refreshTable(stamps)
-    else:
-        (
-            rows.coalesce(1)
-            .write.mode("overwrite")
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(stamps)
-        )
-    return stamps
+    return _append_side(spark, any_index_table, "stamps", rows)
 
 
 def append_stamp_rows(
@@ -744,23 +737,11 @@ def append_stamp_rows(
     extend every merged id's lifetime). Duplicate rows are harmless for
     the same reason as :func:`record_stamps` replays — expiry reads
     MAX(stamp) per id."""
-    stamps, path = _side_table(spark, any_index_table, "stamps")
     out = rows.select(
         F.col("id").cast("long").alias("id"),
         F.col("stamp").cast("long").alias("stamp"),
     )
-    if spark.catalog.tableExists(stamps):
-        out.write.mode("append").format("parquet").saveAsTable(stamps)
-        spark.catalog.refreshTable(stamps)
-    else:
-        (
-            out.coalesce(1)
-            .write.mode("overwrite")
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(stamps)
-        )
-    return stamps
+    return _append_side(spark, any_index_table, "stamps", out)
 
 
 def stamp_rows(spark: SparkSession, any_index_table: str) -> DataFrame | None:
@@ -788,3 +769,442 @@ def expired_ids(
         .filter(F.col("latest") < before_stamp)
         .select("id")
     )
+
+
+# ---------------------------------------------------------------------------
+# the index lifecycle, declared once per kind
+# ---------------------------------------------------------------------------
+
+@dataclass(frozen=True, eq=False)
+class IndexKind:
+    """One persistent-index kind as data, with its lifecycle written once.
+
+    ``kind`` / ``tables``: the on-disk format contract
+    (:func:`check_index_format`) — verified at every probe/mutation
+    entry, stamped at build/compact/retrain. ``bucketed``: (role, bucket
+    key) of every bucketed table; the FIRST is the anchor table, which
+    owns the writer lock, the side relations (tombstones, stamps) and
+    the stamped ids. ``id_col``: the retractable id every bucketed table
+    carries. ``compact_distinct``: the one per-kind compaction rule —
+    drop replayed duplicate rows (only where duplicates are inert at
+    probe, so a replayed append may have left some).
+
+    Index handles: a single-table kind is addressed by its table name,
+    the others by a NamedTuple with one ``<role>_table`` field per role.
+    """
+
+    kind: str
+    tables: dict[str, list[str]]
+    bucketed: tuple[tuple[str, str], ...]
+    id_col: str
+    compact_distinct: bool = False
+
+    #: bucket count of every index table. A constant, not a parameter:
+    #: appends and compactions must match the count the table was built
+    #: with. At 100 TB, size it the usual way (functions/bucketing.py
+    #: guidance): buckets ≈ rows / target partition, typically 4-32k.
+    n_buckets: ClassVar[int] = 16
+
+    @property
+    def anchor(self) -> str:
+        return self.bucketed[0][0]
+
+    def names(self, handle) -> dict[str, str]:
+        """role → catalog table name of the index ``handle``."""
+        if isinstance(handle, str):
+            return {self.anchor: handle}
+        return {role: getattr(handle, f"{role}_table") for role in self.tables}
+
+    def anchor_table(self, handle) -> str:
+        return self.names(handle)[self.anchor]
+
+    def check(self, spark: SparkSession, handle, backfill: bool = False) -> None:
+        """Refuse a foreign or drifted index (probes: read-only;
+        mutators pass ``backfill=True`` — see check_index_format)."""
+        check_index_format(
+            spark, self.anchor_table(handle), self.kind, self.tables,
+            backfill=backfill,
+        )
+
+    def seal(self, spark: SparkSession, handle, path: str, stamp: int | None = None):
+        """The build tail: stamp every built id (``stamp`` None skips
+        the stamp write), then write the format meta. Returns
+        ``handle``."""
+        if stamp is not None:
+            anchor = self.anchor_table(handle)
+            ids = spark.table(anchor).select(self.id_col).distinct()
+            record_stamps(spark, anchor, ids, stamp)
+        write_index_meta(path, self.kind, self.tables)
+        return handle
+
+    def _append_rows(self, spark: SparkSession, handle, rows: dict) -> None:
+        names = self.names(handle)
+        for role, key in self.bucketed:
+            append_bucketed(spark, names[role], rows[role], key, self.n_buckets)
+
+    def append(
+        self,
+        spark: SparkSession,
+        handle,
+        rows: Callable[[], dict[str, DataFrame]],
+        stamp: int | None = None,
+        op: str = "extend",
+        wait: float | None = None,
+    ) -> dict[str, DataFrame]:
+        """Append one row relation per bucketed role. ``rows`` is called
+        UNDER the writer lock, so plans that read the index snapshot
+        inside it (a concurrent writer cannot interleave between the
+        read and the append); it must not return lazy reads of the
+        index tables (snapshot_before_write first). ``stamp`` records
+        the anchor relation's ids BEFORE the data append: a crash in
+        between leaves stamped-but-unindexed ids (harmless — expiry
+        tombstones rows that do not exist, and a replay re-stamps the
+        same values), never indexed-but-unstamped rows TTL could no
+        longer reach. ``wait``: bounded writer-lock retry (see
+        writer_lock). Returns the appended relations (the caller owns
+        any checkpoints among them)."""
+        self.check(spark, handle, backfill=True)
+        anchor = self.anchor_table(handle)
+        with single_writer(spark, anchor, op=op, wait=wait):
+            out = rows()
+            if stamp is not None:
+                ids = out[self.anchor].select(self.id_col).distinct()
+                record_stamps(spark, anchor, ids, stamp)
+            self._append_rows(spark, handle, out)
+        return out
+
+    def delete(self, spark: SparkSession, handle, ids: DataFrame) -> None:
+        """Retract ids (takedowns, withdrawn benchmarks, re-crawl
+        invalidation). O(deleted): a tombstone append, no index rewrite;
+        every probe anti-joins the tombstones (broadcast, exchange-free)
+        so retracted ids match nothing, exactly as if the index had been
+        rebuilt without them — oracle-proved by the ``*_post_delete``
+        registry rows. Compaction folds them into a physical rewrite.
+        Retracted ids stay retracted until then (ids are globally
+        unique, so one is never legitimately re-ingested before)."""
+        self.check(spark, handle, backfill=True)
+        anchor = self.anchor_table(handle)
+        with single_writer(spark, anchor, op="delete"):
+            add_tombstones(spark, anchor, ids)
+
+    def expire(self, spark: SparkSession, handle, before_stamp: int) -> None:
+        """TTL expiry: retract every id whose latest ingest stamp
+        predates ``before_stamp`` — expired ids → tombstones, the
+        deletion path's probe/compaction machinery (oracle-proved by
+        the ``*_post_ttl`` registry rows)."""
+        self.check(spark, handle, backfill=True)
+        anchor = self.anchor_table(handle)
+        with single_writer(spark, anchor, op="expire"):
+            add_tombstones(spark, anchor, expired_ids(spark, anchor, before_stamp))
+
+    def compact(
+        self, spark: SparkSession, handle, new_path: str
+    ) -> dict[str, tuple[int, int]]:
+        """Rewrite every bucketed table into ONE file per bucket,
+        physically dropping tombstoned ids (and, with
+        ``compact_distinct``, replayed duplicate rows), then fold the
+        side relations. Returns {table: (files_before, files_after)}.
+
+        Every append adds up to one file per non-empty bucket, so file
+        count grows with batch cadence — the small-files decay of any
+        bucketed CDC sink. Plain directory compaction
+        (functions/layout.compact) would destroy the bucket layout;
+        instead each table is re-written bucketed on its own key after
+        repartitioning on the EXPLICIT bucket-id expression
+        ``pmod(hash(key), n_buckets)`` — identical to the writer's
+        bucket assignment — so every bucket's rows land whole in one
+        task and the writer emits exactly one file per non-empty bucket.
+        (Repartitioning on the raw key column is NOT enough: the
+        write-side plan re-arranges rows so tasks end up holding several
+        buckets each, one file per (task, bucket).) The rewrite lands at
+        ``new_path`` (reading the live table while overwriting its own
+        location is not safe), then each catalog entry is swapped
+        rename-aside (swap_table — every failure window recoverable);
+        the old generation's directory is the caller's scratch to
+        reclaim. Unbucketed tables (the IVF centroids) are untouched."""
+        self.check(spark, handle, backfill=True)
+        names, anchor = self.names(handle), self.anchor_table(handle)
+        out: dict[str, tuple[int, int]] = {}
+        with single_writer(spark, anchor, op="compact"):
+            tombs = tombstones(spark, anchor)
+            for role, key in self.bucketed:
+                table = names[role]
+                before = len(spark.table(table).inputFiles())
+                live = apply_tombstones(spark.table(table), tombs, self.id_col)
+                if self.compact_distinct:
+                    live = live.distinct()
+                bucket_id = F.pmod(F.hash(F.col(key)), F.lit(self.n_buckets))
+                write_bucketed(
+                    live.repartition(self.n_buckets, bucket_id),
+                    f"{table}_compacting",
+                    os.path.join(new_path, role),
+                    key,
+                    self.n_buckets,
+                )
+                swap_table(spark, table, f"{table}_compacting")
+                out[table] = (before, len(spark.table(table).inputFiles()))
+            # deletions are physical now: tombstones spent, stamps kept
+            # for survivors (TTL must work across generations)
+            fold_side_tables(spark, anchor, new_path)
+            write_index_meta(new_path, self.kind, self.tables)
+        return out
+
+    def merge(
+        self, spark: SparkSession, dst, src, assume_disjoint: bool = True
+    ) -> None:
+        """Fold shard-built index ``src`` into ``dst`` — metadata only,
+        nothing is re-derived. Exact for kinds whose per-id state does
+        not depend on the rest of the corpus (LSH bands and shingle
+        fingerprints, attributed grams): union-of-indexes ≡
+        index-of-union, oracle-proved by the ``*_index_merge`` registry
+        rows. The 100 TB build posture: shard the corpus across
+        independent jobs, build each shard's index in parallel, then
+        fold — the merge moves O(src index) rows. (IVF has no such
+        identity — a vector's cell depends on the trained centroids, so
+        its analog is re-assignment under dst's frozen centroids, i.e.
+        extend_ann_index.)
+
+        ``src``'s retractions are honored at read (deleted ids are not
+        resurrected into ``dst``); its ingest-stamp ledger is carried
+        verbatim (append_stamp_rows) so TTL expiry keeps the ORIGINAL
+        ingest times. ``src`` itself is left untouched.
+
+        ``assume_disjoint``: shard builds partition the id space, so src
+        rows append as-is. With overlapping corpora pass False — src ids
+        already in dst are skipped wholesale (one anti-join on dst's
+        distinct ids) to keep per-id row sets exact (the dedup index's
+        Jaccard verification counts rows; the gram index's duplicates
+        are inert either way). The src reads are lazy but reference
+        only src tables, so reading your own mid-merge writes cannot
+        arise."""
+        if self.anchor_table(dst) == self.anchor_table(src):
+            raise ValueError(f"merge: src and dst are the same {self.kind} index")
+        self.check(spark, dst, backfill=True)
+        self.check(spark, src)
+        s_anchor = self.anchor_table(src)
+        s_tombs = tombstones(spark, s_anchor)
+        s_names = self.names(src)
+        live = {
+            role: apply_tombstones(spark.table(s_names[role]), s_tombs, self.id_col)
+            for role, _ in self.bucketed
+        }
+        d_anchor = self.anchor_table(dst)
+        with single_writer(spark, d_anchor, op="merge"):
+            if not assume_disjoint:
+                seen = spark.table(d_anchor).select(self.id_col).distinct()
+                live = {
+                    role: snapshot_before_write(df.join(seen, self.id_col, "left_anti"))
+                    for role, df in live.items()
+                }
+            ledger = stamp_rows(spark, s_anchor)
+            if ledger is not None:
+                append_stamp_rows(spark, d_anchor, apply_tombstones(ledger, s_tombs, "id"))
+            self._append_rows(spark, dst, live)
+        if not assume_disjoint:
+            for df in live.values():
+                unpersist_checkpoints(df)
+
+    def maintenance(self, spark: SparkSession, handle) -> tuple:
+        """This index's ``(anchor table, n_buckets, compact_fn)`` entry
+        for streaming.maintenance.run_maintenance."""
+        return (
+            self.anchor_table(handle),
+            self.n_buckets,
+            lambda new_path: self.compact(spark, handle, new_path),
+        )
+
+
+DEDUP_LSH = IndexKind(
+    kind="near_dup_lsh",
+    tables={"bands": ["doc_id", "band_key"], "shingles": ["doc_id", "h"]},
+    bucketed=(("bands", "band_key"), ("shingles", "doc_id")),
+    id_col="doc_id",
+)
+CONTAMINATION_GRAMS = IndexKind(
+    kind="contamination_grams",
+    tables={"grams": ["doc_id", "gram"]},
+    bucketed=(("grams", "gram"),),
+    id_col="doc_id",
+    compact_distinct=True,
+)
+ANN_IVF = IndexKind(
+    kind="ann_ivf",
+    tables={"centroids": ["cid", "ce", "ncent"], "cells": ["vec_id", "cell", "qe", "nq"]},
+    bucketed=(("cells", "cell"),),
+    id_col="vec_id",
+)
+
+
+# ---------------------------------------------------------------------------
+# the index-family registry rows: one table, one composer
+# ---------------------------------------------------------------------------
+
+class IndexRow(NamedTuple):
+    """One registry row over a persisted index. The scenario runs between
+    the build and the probe:
+
+    - ``plain``: build the corpus, probe the batch;
+    - ``merge``: build corpus ∧ ``split`` and corpus ∧ ¬``split`` as two
+      shard indexes, merge the second into the first, probe;
+    - ``post_delete``: build, delete the ids matching ``pick``, probe;
+    - ``post_ttl``: build corpus ∧ ``split`` at stamp 0, append the rest
+      at stamp 1, re-stamp the ``pick`` ids at 1 (latest stamp wins),
+      expire everything stamped before 1, probe;
+    - ``retrain``: build corpus ∧ ``split``, append the rest under the
+      then-frozen model, retrain on the whole, probe.
+
+    ``split`` / ``pick``: SQL predicates over the id column. ``oracle``:
+    the argument of the kind's oracle builder (None: its plain form)."""
+
+    name: str
+    kind: IndexKind
+    scenario: str
+    prefix: str
+    split: str | None = None
+    pick: str | None = None
+    oracle: str | None = None
+
+
+INDEX_ROWS = (
+    # near-dup: batch doc_id % 4 == 0 probes the corpus % 4 != 0; the
+    # oracle is the monolithic full-corpus LSH minus ``oracle``'s docs
+    IndexRow("dedup_incremental_index", DEDUP_LSH, "plain", "ddidx"),
+    # shards: odd ids and % 4 == 2
+    IndexRow("dedup_index_merge", DEDUP_LSH, "merge", "ddmrg", split="doc_id % 2 = 1"),
+    # % 8 == 1 ⇒ % 4 == 1: the deleted set is always corpus-only
+    IndexRow(
+        "dedup_index_post_delete", DEDUP_LSH, "post_delete", "ddidxd",
+        pick="doc_id % 8 = 1", oracle="doc_id % 8 = 1",
+    ),
+    # both residues ≡ 1 (mod 4): the expired set is always corpus-only;
+    # survivors = everything but % 8 == 5, plus the refreshed % 16 == 13
+    IndexRow(
+        "dedup_index_post_ttl", DEDUP_LSH, "post_ttl", "ddidxt",
+        split="doc_id % 8 = 5", pick="doc_id % 16 = 13",
+        oracle="doc_id % 8 = 5 AND doc_id % 16 <> 13",
+    ),
+    # decontamination: the held-out set doc_id % 50 == 0 is indexed, the
+    # rest probed; the oracle is the monolithic recompute whose bench
+    # universe is ``oracle``
+    IndexRow("contamination_incremental_index", CONTAMINATION_GRAMS, "plain", "contidx"),
+    # shards: even and odd multiples of 50
+    IndexRow(
+        "contamination_index_merge", CONTAMINATION_GRAMS, "merge", "contmrg",
+        split="doc_id % 100 = 0",
+    ),
+    # half the held-out set is retracted: grams unique to it must stop
+    # flagging, shared grams must keep flagging
+    IndexRow(
+        "contamination_index_post_delete", CONTAMINATION_GRAMS, "post_delete",
+        "contidxd", pick="doc_id % 100 = 0",
+        oracle="doc_id % 50 = 0 AND NOT (doc_id % 100 = 0)",
+    ),
+    IndexRow(
+        "contamination_index_post_ttl", CONTAMINATION_GRAMS, "post_ttl", "contidxt",
+        split="doc_id % 100 = 0", pick="doc_id % 200 = 0",
+        oracle="doc_id % 50 = 0 AND (doc_id % 100 <> 0 OR doc_id % 200 = 0)",
+    ),
+    # IVF: the whole corpus is indexed, vec_id < N_QUERIES probed; the
+    # oracle is ann_ivf_topk's verbatim
+    IndexRow("ann_ivf_index_topk", ANN_IVF, "plain", "annidx"),
+    # retrain resamples with the full-corpus stride, so it must
+    # reproduce the monolithic result bit for bit
+    IndexRow("ann_ivf_retrain_topk", ANN_IVF, "retrain", "annidxr", split="vec_id % 2 = 0"),
+    # disjoint from the queries (vec_id < 10 < 37); the oracle drops
+    # the deleted vectors from the candidate side only — centroids are
+    # cell ADDRESSES and stay frozen across deletes
+    IndexRow(
+        "ann_ivf_index_post_delete", ANN_IVF, "post_delete", "annidxd",
+        pick="vec_id % 50 = 37", oracle="vec_id % 50 = 37",
+    ),
+)
+
+
+class IndexFamily(NamedTuple):
+    """What the composer needs from one kind's module: its memos, the
+    corpus/batch split, and the per-kind kernels."""
+
+    spec: IndexKind
+    memo: CheckpointMemo  # of the kind's rows
+    merge_memo: CheckpointMemo | None  # the merge row's own (None: no merge row)
+    corpus: str | None  # SQL predicate of the indexed corpus (None: all)
+    batch: str  # SQL predicate of the probed batch
+    load: Callable  # (spark, sf_dir) -> rows
+    build: Callable  # (spark, sf_dir, rows, path, name, stamp, whole) -> handle
+    ingest: Callable  # (spark, handle, rows, stamp) -> None
+    probe: Callable  # (spark, batch, handle) -> (result, eviction extras)
+    oracle: Callable  # IndexRow.oracle -> oracle SQL
+    retrain: Callable | None = None  # (spark, handle, new_path) -> stats
+
+
+def register_index_rows(family: IndexFamily) -> tuple:
+    """Register every :data:`INDEX_ROWS` row of ``family``'s kind, in
+    table order; returns the query functions. Each kind module calls
+    this itself, after its kernels: registration order is the registry
+    gate order's last tie-break (operators/registry.gate_order), so
+    registering all 11 rows from one place would reorder the gate's
+    verification prefix."""
+    from ..operators.registry import query
+
+    return tuple(
+        query(row.name, oracle=family.oracle(row.oracle))(_row_query(family, row))
+        for row in INDEX_ROWS
+        if row.kind is family.spec
+    )
+
+
+def _row_query(fam: IndexFamily, row: IndexRow):
+    spec = fam.spec
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        app = spark.sparkContext.applicationId
+        plain = row.scenario in ("plain", "merge")
+        key = (app, sf_dir) if plain else (app, sf_dir, row.scenario)
+        memo = fam.merge_memo if row.scenario == "merge" else fam.memo
+        cached = memo.get(key)
+        if cached is not None:
+            return cached
+        docs = fam.load(spark, sf_dir)
+        corpus = docs if fam.corpus is None else docs.filter(F.expr(fam.corpus))
+        first, rest = corpus, None
+        if row.split is not None:
+            first = corpus.filter(F.expr(row.split))
+            rest = corpus.filter(~F.expr(row.split))
+        name = index_table_name(row.prefix, app, sf_dir)
+        ttl = row.scenario == "post_ttl"
+        if row.scenario == "merge":
+            index = fam.build(
+                spark, sf_dir, first, tempfile.mkdtemp(prefix=f"{name}a_"),
+                f"{name}a", None, False,
+            )
+            src = fam.build(
+                spark, sf_dir, rest, tempfile.mkdtemp(prefix=f"{name}b_"),
+                f"{name}b", None, False,
+            )
+            spec.merge(spark, index, src)
+        else:
+            index = fam.build(
+                spark, sf_dir, first, tempfile.mkdtemp(prefix=f"{name}_"),
+                name, 0 if ttl else None, row.split is None and fam.corpus is None,
+            )
+        if row.scenario in ("post_ttl", "retrain"):
+            fam.ingest(spark, index, rest, 1 if ttl else None)
+        if ttl:
+            # the refreshed slice arrives again at stamp 1: only its
+            # stamp ledger row is new (its rows are already indexed) —
+            # an index mutation all the same, so it holds the lock
+            anchor = spec.anchor_table(index)
+            with single_writer(spark, anchor, op="refresh"):
+                ids = corpus.filter(F.expr(row.pick)).select(spec.id_col)
+                record_stamps(spark, anchor, ids, stamp=1)
+            spec.expire(spark, index, before_stamp=1)
+        if row.scenario == "post_delete":
+            spec.delete(spark, index, docs.filter(F.expr(row.pick)).select(spec.id_col))
+        if row.scenario == "retrain":
+            fam.retrain(spark, index, tempfile.mkdtemp(prefix=f"{name}_g2"))
+        out, extras = fam.probe(spark, docs.filter(F.expr(fam.batch)), index)
+        return memo.put(key, out.localCheckpoint(eager=True), *extras)
+
+    run.__name__ = run.__qualname__ = row.name
+    run.__doc__ = f"The {row.scenario} scenario of the {spec.kind} index (INDEX_ROWS)."
+    return run

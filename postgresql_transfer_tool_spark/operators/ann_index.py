@@ -31,7 +31,6 @@ that query's oracle verbatim.
 
 from __future__ import annotations
 
-import tempfile
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,21 +38,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import table_row_count
-from ..functions.bucketing import index_table_name, write_bucketed
+from ..functions.bucketing import write_bucketed
 from ..functions.index_base import (
-    add_tombstones,
+    ANN_IVF,
+    IndexFamily,
     apply_tombstones,
-    check_index_format,
     fold_side_tables,
-    expired_ids,
-    record_stamps,
+    register_index_rows,
     single_writer,
-    swap_table,
+    snapshot_before_write,
     tombstones,
-    write_index_meta,
 )
-from ..functions.memo import CheckpointMemo
-from .registry import ORACLES, query
+from ..functions.memo import CheckpointMemo, unpersist_checkpoints
+from .registry import ORACLES
 from .similarity import (
     MAX_CELL_BITS,
     NPROBE,
@@ -91,32 +88,13 @@ def collect_centroids(spark: SparkSession, table: str) -> list:
         )
     return [(r.cid, r.ce, r.ncent) for r in rows]
 
-#: bucket count for the cells table at fixture scale; at 100 TB size it
-#: like any bucketed layout (functions/bucketing.py guidance)
-N_CELL_BUCKETS = 16
-
 
 class AnnIndex(NamedTuple):
+    """Handle to a persisted IVF index; its lifecycle (append, delete,
+    expire, compact) is functions/index_base.ANN_IVF's."""
+
     centroids_table: str
     cells_table: str
-
-
-#: on-disk format contract (functions/index_base.check_index_format):
-#: verified at every probe/mutation entry, stamped at build/compact/retrain
-_FORMAT_KIND = "ann_ivf"
-_FORMAT_TABLES = {
-    "centroids": ["cid", "ce", "ncent"],
-    "cells": ["vec_id", "cell", "qe", "nq"],
-}
-
-
-def _check_format(
-    spark: SparkSession, index: "AnnIndex", backfill: bool = False
-) -> None:
-    check_index_format(
-        spark, index.cells_table, _FORMAT_KIND, _FORMAT_TABLES,
-        backfill=backfill,
-    )
 
 
 def build_ann_index(
@@ -124,7 +102,6 @@ def build_ann_index(
     vectors: DataFrame,
     path: str,
     name: str,
-    n_buckets: int = N_CELL_BUCKETS,
     n_rows: int | None = None,
 ) -> AnnIndex:
     """Persist the IVF state of a (vec_id, qe, nq) quantized-embedding
@@ -154,111 +131,40 @@ def build_ann_index(
         "qe",
         "nq",
     )
-    write_bucketed(assigned, idx.cells_table, f"{path}/cells", "cell", n_buckets)
-    write_index_meta(path, _FORMAT_KIND, _FORMAT_TABLES)
-    return idx
+    write_bucketed(assigned, idx.cells_table, f"{path}/cells", "cell", ANN_IVF.n_buckets)
+    return ANN_IVF.seal(spark, idx, path)
 
 
 def extend_ann_index(
     spark: SparkSession,
     index: AnnIndex,
     new_vectors: DataFrame,
-    n_buckets: int = N_CELL_BUCKETS,
     stamp: int | None = None,
 ) -> None:
     """Append new vectors under the FROZEN centroid set (classic IVF
     incremental ingest; recall under distribution shift is the re-train
-    path's business — :func:`retrain_ann_index`). The append relation
-    is materialized before the write (read-your-own-writes hygiene
-    shared with the dedup index — here the plan only reads the
-    centroids table, which this function never mutates, but the
-    snapshot keeps the contract uniform). ``stamp``: optional logical
-    ingest stamp for TTL expiry."""
-    from ..functions.index_base import append_bucketed, snapshot_before_write
-    from ..functions.memo import unpersist_checkpoints
+    path's business — :func:`retrain_ann_index`). The centroids are
+    collected and the assignment materialized under the writer lock (a
+    concurrent retrain could otherwise swap the centroids between the
+    assignment and the append). ``stamp``: optional logical ingest
+    stamp for TTL expiry."""
 
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.cells_table, op="extend"):
+    def assigned() -> dict[str, DataFrame]:
         cent_rows = collect_centroids(spark, index.centroids_table)
-        assigned = snapshot_before_write(
-            new_vectors.select(
-                "vec_id",
-                top_cells_by_cosine(cent_rows, 1)("qe", "nq")[0].alias("cell"),
-                "qe",
-                "nq",
-            )
-        )
-        # stamps BEFORE the data append (round-9 review): a crash in
-        # between then leaves stamped-but-unindexed ids (harmless —
-        # expiry tombstones a row that does not exist, and the streaming
-        # repair re-appends + re-stamps the same values), never
-        # indexed-but-unstamped rows that TTL could no longer reach
-        if stamp is not None:
-            record_stamps(
-                spark, index.cells_table, assigned.select("vec_id"), stamp
-            )
-        append_bucketed(spark, index.cells_table, assigned, "cell", n_buckets)
-    unpersist_checkpoints(assigned)
+        cell = top_cells_by_cosine(cent_rows, 1)("qe", "nq")[0].alias("cell")
+        return {"cells": snapshot_before_write(new_vectors.select("vec_id", cell, "qe", "nq"))}
+
+    unpersist_checkpoints(ANN_IVF.append(spark, index, assigned, stamp)["cells"])
 
 
-def delete_from_ann_index(
-    spark: SparkSession, index: AnnIndex, vec_ids: DataFrame
-) -> None:
-    """Retract vectors from the served corpus (takedowns — VERDICT r8
-    #2). O(deleted) tombstones; probes broadcast-anti-join them out of
-    the cells relation, so retracted vectors never surface as neighbors
-    and surviving ranks close up exactly as a rebuild's would
-    (pytest-proved parity in tests/test_ann_index.py). Compaction or
-    re-train folds the tombstones physically. Frozen centroids are
-    untouched — a centroid is a cell ADDRESS, not a served row, so a
-    retracted vector that seeded a cell keeps addressing it."""
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.cells_table, op="delete"):
-        add_tombstones(spark, index.cells_table, vec_ids)
-
-
-def expire_ann_index(
-    spark: SparkSession, index: AnnIndex, before_stamp: int
-) -> None:
-    """TTL expiry over the ingest-stamp ledger (stamps recorded when
-    build/extend were called with one)."""
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.cells_table, op="expire"):
-        add_tombstones(
-            spark, index.cells_table, expired_ids(spark, index.cells_table, before_stamp)
-        )
-
-
-def compact_ann_index(
-    spark: SparkSession,
-    index: AnnIndex,
-    new_path: str,
-    n_buckets: int = N_CELL_BUCKETS,
-) -> tuple[int, int]:
-    """Rewrite the cells table one-file-per-bucket, physically dropping
-    tombstoned vectors, then clear the side relations. Centroids stay
-    frozen (compaction is storage hygiene, not a model change — that is
-    :func:`retrain_ann_index`). Same pmod(hash(cell), n) repartition
-    trick as compact_dedup_index. Returns (files_before, files_after)."""
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.cells_table, op="compact"):
-        before = len(spark.table(index.cells_table).inputFiles())
-        live = apply_tombstones(
-            spark.table(index.cells_table), tombstones(spark, index.cells_table), "vec_id"
-        )
-        tmp = f"{index.cells_table}_compacting"
-        bucket_id = F.pmod(F.hash(F.col("cell")), F.lit(n_buckets))
-        write_bucketed(
-            live.repartition(n_buckets, bucket_id),
-            tmp,
-            f"{new_path}/cells",
-            "cell",
-            n_buckets,
-        )
-        swap_table(spark, index.cells_table, tmp)
-        fold_side_tables(spark, index.cells_table, new_path)
-        write_index_meta(new_path, _FORMAT_KIND, _FORMAT_TABLES)
-        return before, len(spark.table(index.cells_table).inputFiles())
+#: a retracted vector never surfaces as a neighbor and surviving ranks
+#: close up exactly as a rebuild's would; frozen centroids are untouched
+#: (a centroid is a cell ADDRESS, not a served row)
+delete_from_ann_index = ANN_IVF.delete
+expire_ann_index = ANN_IVF.expire
+#: storage hygiene, not a model change: centroids stay frozen (that is
+#: retrain_ann_index)
+compact_ann_index = ANN_IVF.compact
 
 
 def _retrain_swap(
@@ -336,7 +242,6 @@ def retrain_ann_index(
     spark: SparkSession,
     index: AnnIndex,
     new_path: str,
-    n_buckets: int = N_CELL_BUCKETS,
 ) -> dict[str, int]:
     """Re-train the IVF model on the ACCUMULATED corpus (VERDICT r8
     #3): frozen centroids decay under distribution shift — vectors
@@ -361,7 +266,7 @@ def retrain_ann_index(
 
     Returns {"n_vectors": ..., "n_centroids": ...}.
     """
-    _check_format(spark, index, backfill=True)
+    ANN_IVF.check(spark, index, backfill=True)
     with single_writer(spark, index.cells_table, op="retrain"):
         corpus = apply_tombstones(
             spark.table(index.cells_table), tombstones(spark, index.cells_table), "vec_id"
@@ -390,6 +295,7 @@ def retrain_ann_index(
             "nq",
         )
         tmp_cells = f"{index.cells_table}_retraining"
+        n_buckets = ANN_IVF.n_buckets
         bucket_id = F.pmod(F.hash(F.col("cell")), F.lit(n_buckets))
         write_bucketed(
             assigned.repartition(n_buckets, bucket_id),
@@ -400,7 +306,7 @@ def retrain_ann_index(
         )
         _retrain_swap(spark, index, tmp_cells, tmp_cent)
         fold_side_tables(spark, index.cells_table, new_path)
-        write_index_meta(new_path, _FORMAT_KIND, _FORMAT_TABLES)
+        ANN_IVF.seal(spark, index, new_path)
         return {"n_vectors": n, "n_centroids": len(cent_rows)}
 
 
@@ -420,7 +326,7 @@ def ann_query_index(
     list to skip the bounded driver collect — for callers that need the
     centroids themselves anyway (the growing funnel probe collects once
     per epoch and shares it here)."""
-    _check_format(spark, index)
+    ANN_IVF.check(spark, index)
     if cent_rows is None:
         cent_rows = collect_centroids(spark, index.centroids_table)
     probes = queries.select(
@@ -460,138 +366,57 @@ def ann_query_index(
     )
 
 
+#: session memo of the registry rows (functions/index_base.INDEX_ROWS)
 _ANNIDX_MEMO = CheckpointMemo()
 
 
-def _index_name(app_id: str, sf_dir: str) -> str:
-    return index_table_name("annidx", app_id, sf_dir)
+def _probe(spark: SparkSession, queries: DataFrame, index: AnnIndex):
+    # NO eviction extra, deliberately: ann_query_index creates no
+    # checkpoints of its own — the only LogicalRDD leaves in its
+    # lineage are the SHARED quantized-embeddings checkpoint owned by
+    # similarity._QUANT_CACHE. Registering it as an extra would
+    # unpersist that shared handle on eviction while the other memo
+    # still serves it (cross-memo ownership).
+    return ann_query_index(spark, queries, index), ()
 
 
-@query("ann_ivf_index_topk", oracle=ORACLES["ann_ivf_topk"])
-def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k THROUGH the persisted index: build once per session
-    from the full embeddings corpus, probe the standard query set
-    (vec_id < N_QUERIES). Same centroid sample, assignment kernel, and
-    rerank expression as `ann_ivf_topk`, so the oracle is that query's
-    oracle verbatim — the persisted path must reproduce the monolithic
-    result bit-for-bit through the parquet round-trip."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ANNIDX_MEMO.get(key)
-    if cached is None:
-        vectors = _spark_quantized_materialized(spark, sf_dir).select(
-            "vec_id", "qe", "nq"
-        )
-        name = _index_name(spark.sparkContext.applicationId, sf_dir)
-        index = build_ann_index(
-            spark,
-            vectors,
-            tempfile.mkdtemp(prefix=f"{name}_"),
-            name,
-            n_rows=table_row_count(sf_dir, "embeddings"),
-        )
-        out = ann_query_index(
-            spark, vectors.filter(F.col("vec_id") < N_QUERIES), index
-        )
-        # NO eviction extra here, deliberately: ann_query_index creates
-        # no checkpoints of its own — the only LogicalRDD leaves in
-        # out's lineage are the SHARED quantized-embeddings checkpoint
-        # owned by similarity._QUANT_CACHE. Registering `out` as an
-        # extra would unpersist that shared handle on eviction while
-        # the other memo still serves it (cross-memo ownership, the r7
-        # ADVICE class from the opposite direction).
-        cached = _ANNIDX_MEMO.put(key, out.localCheckpoint(eager=True))
-    return cached
+def _oracle(deleted: str | None) -> str:
+    """`ann_ivf_topk`'s oracle verbatim — the index reuses its centroid
+    sample, assignment kernel and rerank expression, so the persisted
+    path must reproduce it bit for bit. ``deleted``: drop those vectors
+    from the candidate side ONLY; the centroid sample stays the
+    full-corpus one, mirroring the engine's frozen centroids."""
+    base = ORACLES["ann_ivf_topk"]
+    if deleted is None:
+        return base
+    out = base.replace(
+        "WHERE s.vec_id <> p.query_id",
+        f"WHERE s.vec_id <> p.query_id AND NOT (s.{deleted})",
+    )
+    assert out != base
+    return out
 
 
-@query("ann_ivf_retrain_topk", oracle=ORACLES["ann_ivf_topk"])
-def ann_ivf_retrain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k through a RETRAINED index (round 9): build on the even
-    half of the corpus, extend with the odd half under the then-frozen
-    (half-corpus) centroids, then retrain_ann_index over the accumulated
-    whole. Retrain resamples centroids from the full corpus with the
-    same deterministic id-hash rule and stride a fresh full-corpus build
-    would use, so the retrained index must reproduce the monolithic
-    `ann_ivf_topk` result bit-for-bit — that query's oracle applies
-    verbatim, giving the re-train lifecycle an oracle-backed driver row
-    (the recall-recovery behavior itself is pinned separately by the
-    drift-curve pytest)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "retrain")
-    cached = _ANNIDX_MEMO.get(key)
-    if cached is None:
-        vectors = _spark_quantized_materialized(spark, sf_dir).select(
-            "vec_id", "qe", "nq"
-        )
-        name = index_table_name(
-            "annidxr", spark.sparkContext.applicationId, sf_dir
-        )
-        even = vectors.filter(F.col("vec_id") % 2 == 0)
-        index = build_ann_index(
-            spark, even, tempfile.mkdtemp(prefix=f"{name}_"), name
-        )
-        extend_ann_index(spark, index, vectors.filter(F.col("vec_id") % 2 == 1))
-        retrain_ann_index(spark, index, tempfile.mkdtemp(prefix=f"{name}_g2"))
-        out = ann_query_index(
-            spark, vectors.filter(F.col("vec_id") < N_QUERIES), index
-        )
-        # no eviction extra — same shared-checkpoint ownership note as
-        # ann_ivf_index_topk above
-        cached = _ANNIDX_MEMO.put(key, out.localCheckpoint(eager=True))
-    return cached
-
-
-#: post-delete split: vectors with vec_id % 50 == 37 are retracted —
-#: disjoint from the query set (vec_id < N_QUERIES = 10 < 37), so every
-#: query still probes and only the CANDIDATE side shrinks
-_ANN_DELETE_PRED = "vec_id % 50 = 37"
-
-#: the monolithic IVF oracle with retracted vectors excluded from the
-#: candidate side ONLY: the centroid sample stays the full-corpus one
-#: (a centroid is a cell ADDRESS, not a served row — the engine keeps
-#: centroids frozen across deletes, and the oracle must mirror that),
-#: while deleted vectors never surface as neighbors and surviving
-#: ranks close up exactly as a rebuild's would
-_ANN_POST_DELETE_ORACLE = ORACLES["ann_ivf_topk"].replace(
-    "WHERE s.vec_id <> p.query_id",
-    f"WHERE s.vec_id <> p.query_id AND NOT (s.{_ANN_DELETE_PRED})",
-)
-assert _ANN_POST_DELETE_ORACLE != ORACLES["ann_ivf_topk"]
-
-
-@query("ann_ivf_index_post_delete", oracle=_ANN_POST_DELETE_ORACLE)
-def ann_ivf_index_post_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 deletion parity (round 11 — the vector-index analog of
-    `dedup_index_post_delete`): retract a slice of the corpus
-    (vec_id % 50 == 37) from the persisted IVF index, then run the
-    standard top-k probe. Previously the tombstone path here was
-    pytest-pinned only; this row proves it cross-engine: retracted
-    vectors must never surface as neighbors, surviving ranks close up
-    exactly as a from-scratch rebuild's would, and the frozen centroid
-    addressing is untouched (the oracle keeps the full-corpus centroid
-    sample while dropping retracted vectors from the candidate side —
-    exactly the engine's tombstone semantics)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "post_delete")
-    cached = _ANNIDX_MEMO.get(key)
-    if cached is None:
-        vectors = _spark_quantized_materialized(spark, sf_dir).select(
-            "vec_id", "qe", "nq"
-        )
-        name = index_table_name(
-            "annidxd", spark.sparkContext.applicationId, sf_dir
-        )
-        index = build_ann_index(
-            spark,
-            vectors,
-            tempfile.mkdtemp(prefix=f"{name}_"),
-            name,
-            n_rows=table_row_count(sf_dir, "embeddings"),
-        )
-        delete_from_ann_index(
-            spark, index, vectors.filter(F.expr(_ANN_DELETE_PRED)).select("vec_id")
-        )
-        out = ann_query_index(
-            spark, vectors.filter(F.col("vec_id") < N_QUERIES), index
-        )
-        # no eviction extra — same shared-checkpoint ownership note as
-        # ann_ivf_index_topk above
-        cached = _ANNIDX_MEMO.put(key, out.localCheckpoint(eager=True))
-    return cached
+(
+    ann_ivf_index_topk,
+    ann_ivf_retrain_topk,
+    ann_ivf_index_post_delete,
+) = register_index_rows(IndexFamily(
+    spec=ANN_IVF,
+    memo=_ANNIDX_MEMO,
+    merge_memo=None,
+    corpus=None,
+    batch=f"vec_id < {N_QUERIES}",
+    load=lambda spark, sf_dir: _spark_quantized_materialized(spark, sf_dir).select(
+        "vec_id", "qe", "nq"
+    ),
+    # the whole corpus's size is in the parquet footers: skip the count
+    build=lambda spark, sf_dir, vectors, path, name, stamp, whole: build_ann_index(
+        spark, vectors, path, name,
+        n_rows=table_row_count(sf_dir, "embeddings") if whole else None,
+    ),
+    ingest=extend_ann_index,
+    probe=_probe,
+    oracle=_oracle,
+    retrain=retrain_ann_index,
+))

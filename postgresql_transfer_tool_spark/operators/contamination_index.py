@@ -41,47 +41,22 @@ ingest batch.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.bucketing import index_table_name, write_bucketed
+from ..functions.bucketing import write_bucketed
 from ..functions.index_base import (
-    add_tombstones,
-    append_bucketed,
-    append_stamp_rows,
+    CONTAMINATION_GRAMS,
+    IndexFamily,
     apply_tombstones,
-    check_index_format,
-    fold_side_tables,
-    expired_ids,
-    record_stamps,
-    single_writer,
-    stamp_rows,
-    swap_table,
+    register_index_rows,
     tombstones,
-    write_index_meta,
 )
 from ..functions.memo import CheckpointMemo, unpersist_checkpoints
 from .corpus import _BENCH_MOD, _NGRAM, _SQL_TOKS
-from .registry import query
 
-#: bucket count at fixture scale; size like any bucketed layout at 100 TB
-N_GRAM_BUCKETS = 16
-
-#: on-disk format contract (functions/index_base.check_index_format):
-#: verified at every probe/mutation entry, stamped at build/compact
-_FORMAT_KIND = "contamination_grams"
-_FORMAT_TABLES = {"grams": ["doc_id", "gram"]}
-
-
-def _check_format(
-    spark: SparkSession, grams_table: str, backfill: bool = False
-) -> None:
-    check_index_format(
-        spark, grams_table, _FORMAT_KIND, _FORMAT_TABLES, backfill=backfill
-    )
 
 def _grams_expr():
     # built lazily: F.expr needs an active SparkContext, and operator
@@ -119,7 +94,6 @@ def build_contamination_index(
     bench_docs: DataFrame,
     path: str,
     name: str,
-    n_buckets: int = N_GRAM_BUCKETS,
     stamp: int | None = None,
 ) -> str:
     """Persist the held-out corpus's attributed (doc_id, gram) rows as
@@ -128,74 +102,52 @@ def build_contamination_index(
     logical ingest stamp for TTL expiry (None skips the write)."""
     rows = gram_rows_from_docs(bench_docs)
     table = f"{name}_grams"
-    write_bucketed(rows, table, os.path.join(path, "grams"), "gram", n_buckets)
-    if stamp is not None:
-        record_stamps(spark, table, rows.select("doc_id").distinct(), stamp)
-    write_index_meta(path, _FORMAT_KIND, _FORMAT_TABLES)
+    write_bucketed(
+        rows, table, os.path.join(path, "grams"), "gram", CONTAMINATION_GRAMS.n_buckets
+    )
     unpersist_checkpoints(rows)
-    return table
+    return CONTAMINATION_GRAMS.seal(spark, table, path, stamp)
 
 
 def extend_contamination_index(
     spark: SparkSession,
     grams_table: str,
     new_bench_docs: DataFrame,
-    n_buckets: int = N_GRAM_BUCKETS,
     stamp: int | None = None,
 ) -> None:
     """Append a new held-out set's attributed gram rows (benchmarks
     version and grow — the index must too, without re-tokenizing what
     is already there). Duplicate rows from replayed appends are
     harmless (distinct-at-probe); compaction removes them."""
-    _check_format(spark, grams_table, backfill=True)
-    with single_writer(spark, grams_table, op="extend"):
-        # keep a handle on the INNER pre-explode checkpoint: wrapping
-        # the gram rows in an eager checkpoint truncates lineage, so
-        # unpersist_checkpoints(rows) alone could no longer reach it
-        # (round-9 review: one orphaned checkpoint per epoch otherwise)
-        pre = gram_arrays_from_docs(new_bench_docs).localCheckpoint(eager=False)
-        rows = pre.select("doc_id", F.explode("grams").alias("gram")).localCheckpoint(
-            eager=True
-        )
-        # stamps before the data append — see extend_ann_index
-        if stamp is not None:
-            record_stamps(spark, grams_table, rows.select("doc_id").distinct(), stamp)
-        append_bucketed(spark, grams_table, rows, "gram", n_buckets)
-    for d in (rows, pre):
+    # keep a handle on the INNER pre-explode checkpoint: wrapping the
+    # gram rows in an eager checkpoint truncates lineage, so
+    # unpersist_checkpoints(rows) alone could no longer reach it
+    # (one orphaned checkpoint per epoch otherwise)
+    pre = gram_arrays_from_docs(new_bench_docs).localCheckpoint(eager=False)
+    out = CONTAMINATION_GRAMS.append(
+        spark,
+        grams_table,
+        lambda: {
+            "grams": pre.select("doc_id", F.explode("grams").alias("gram"))
+            .localCheckpoint(eager=True)
+        },
+        stamp,
+    )
+    for d in (out["grams"], pre):
         unpersist_checkpoints(d)
 
 
-def merge_contamination_index(
-    spark: SparkSession,
-    dst_grams_table: str,
-    src_grams_table: str,
-    n_buckets: int = N_GRAM_BUCKETS,
-) -> None:
-    """Fold shard-built gram index ``src`` into ``dst`` — metadata only,
-    no document re-tokenized. Attributed (doc_id, gram) rows are a
-    per-document property, so union-of-indexes ≡ index-of-union exactly
-    (oracle-proved by the ``contamination_index_merge`` registry row);
-    held-out sets maintained by separate teams/jobs build independently
-    and fold here. Cross-shard duplicate (doc_id, gram) rows — the same
-    bench doc indexed by both shards — are harmless by the index's own
-    distinct-at-probe contract, so no overlap guard is needed (unlike
-    the dedup index, whose Jaccard verification counts rows).
-
-    ``src``'s retractions are honored at read; its ingest-stamp ledger
-    is carried verbatim so TTL expiry keeps original ingest times."""
-    if dst_grams_table == src_grams_table:
-        raise ValueError("merge_contamination_index: src and dst are the same")
-    _check_format(spark, dst_grams_table, backfill=True)
-    _check_format(spark, src_grams_table)
-    s_tombs = tombstones(spark, src_grams_table)
-    live = apply_tombstones(spark.table(src_grams_table), s_tombs, "doc_id")
-    with single_writer(spark, dst_grams_table, op="merge"):
-        ledger = stamp_rows(spark, src_grams_table)
-        if ledger is not None:
-            append_stamp_rows(
-                spark, dst_grams_table, apply_tombstones(ledger, s_tombs, "id")
-            )
-        append_bucketed(spark, dst_grams_table, live, "gram", n_buckets)
+#: attributed (doc_id, gram) rows are a per-document property, so
+#: union-of-indexes ≡ index-of-union; cross-shard duplicate rows are
+#: inert (distinct-at-probe), so the default disjoint append is exact
+merge_contamination_index = CONTAMINATION_GRAMS.merge
+#: grams carried ONLY by retracted docs stop flagging training docs,
+#: grams shared with surviving docs keep flagging — attribution makes
+#: that distinction computable
+delete_from_contamination_index = CONTAMINATION_GRAMS.delete
+expire_contamination_index = CONTAMINATION_GRAMS.expire
+#: also folds replayed duplicate rows (CONTAMINATION_GRAMS.compact_distinct)
+compact_contamination_index = CONTAMINATION_GRAMS.compact
 
 
 def surviving_grams(spark: SparkSession, grams_table: str) -> DataFrame:
@@ -226,7 +178,7 @@ def check_batch_contamination(
     park the result in a ``CheckpointMemo`` (the registry query below
     does the latter) — or block-manager storage grows one checkpoint
     per batch for the life of the session."""
-    _check_format(spark, grams_table)
+    CONTAMINATION_GRAMS.check(spark, grams_table)
     train = gram_rows_from_docs(batch_docs)
     bench = surviving_grams(spark, grams_table).select(F.col("gram").alias("bgram"))
     return (
@@ -238,69 +190,6 @@ def check_batch_contamination(
             (F.count("bgram") > 0).alias("is_contaminated"),
         )
     )
-
-
-def delete_from_contamination_index(
-    spark: SparkSession, grams_table: str, bench_doc_ids: DataFrame
-) -> None:
-    """Retract held-out documents (withdrawn/re-versioned benchmarks).
-    O(deleted) tombstones; probes see the surviving gram universe —
-    grams carried ONLY by retracted docs stop flagging training docs,
-    grams shared with surviving docs keep flagging (attribution makes
-    that distinction computable; oracle-proved by
-    `contamination_index_post_delete`)."""
-    _check_format(spark, grams_table, backfill=True)
-    with single_writer(spark, grams_table, op="delete"):
-        add_tombstones(spark, grams_table, bench_doc_ids)
-
-
-def expire_contamination_index(
-    spark: SparkSession, grams_table: str, before_stamp: int
-) -> None:
-    """TTL expiry over the ingest-stamp ledger — composition of
-    expired_ids → tombstones, like the dedup index's."""
-    _check_format(spark, grams_table, backfill=True)
-    with single_writer(spark, grams_table, op="expire"):
-        add_tombstones(spark, grams_table, expired_ids(spark, grams_table, before_stamp))
-
-
-def compact_contamination_index(
-    spark: SparkSession,
-    grams_table: str,
-    new_path: str,
-    n_buckets: int = N_GRAM_BUCKETS,
-) -> tuple[int, int]:
-    """Rewrite the gram table into one file per bucket, physically
-    dropping tombstoned docs' rows AND replay-duplicated rows, then
-    clear the side relations. Same pmod(hash(gram), n)-repartition
-    trick as compact_dedup_index (see there for why repartitioning on
-    the raw key is not enough). Returns (files_before, files_after)."""
-    _check_format(spark, grams_table, backfill=True)
-    with single_writer(spark, grams_table, op="compact"):
-        before = len(spark.table(grams_table).inputFiles())
-        live = apply_tombstones(
-            spark.table(grams_table), tombstones(spark, grams_table), "doc_id"
-        ).distinct()
-        tmp = f"{grams_table}_compacting"
-        bucket_id = F.pmod(F.hash(F.col("gram")), F.lit(n_buckets))
-        write_bucketed(
-            live.repartition(n_buckets, bucket_id),
-            tmp,
-            os.path.join(new_path, "grams"),
-            "gram",
-            n_buckets,
-        )
-        swap_table(spark, grams_table, tmp)
-        fold_side_tables(spark, grams_table, new_path)
-        write_index_meta(new_path, _FORMAT_KIND, _FORMAT_TABLES)
-        return before, len(spark.table(grams_table).inputFiles())
-
-
-_CONTIDX_MEMO = CheckpointMemo()
-
-
-def _index_name(app_id: str, sf_dir: str) -> str:
-    return index_table_name("contidx", app_id, sf_dir)
 
 
 def _monolithic_oracle(bench_pred: str) -> str:
@@ -333,188 +222,42 @@ def _monolithic_oracle(bench_pred: str) -> str:
     """
 
 
-@query(
-    "contamination_incremental_index",
-    oracle=_monolithic_oracle(f"doc_id % {_BENCH_MOD} = 0"),
-)
-def contamination_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination through the PERSISTED gram index: benchmark =
-    doc_id % 50 == 0 (indexed once per session), training batch = the
-    rest (probed). The oracle is the monolithic recompute — the same
-    SQL as `contamination_ngram_overlap` — proving the index path is
-    result-identical while paying only O(batch) per probe."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CONTIDX_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        name = _index_name(spark.sparkContext.applicationId, sf_dir)
-        table = build_contamination_index(
-            spark,
-            docs.filter(F.col("doc_id") % _BENCH_MOD == 0),
-            tempfile.mkdtemp(prefix=f"{name}_"),
-            name,
-        )
-        probe = check_batch_contamination(
-            spark, docs.filter(F.col("doc_id") % _BENCH_MOD != 0), table
-        )
-        # the original probe plan is registered as an eviction extra:
-        # the eager checkpoint's plan no longer references the batch's
-        # lazy pre-explode checkpoint hiding in probe's lineage, and the
-        # memo must free those blocks too (the r7 ADVICE extras pattern)
-        cached = _CONTIDX_MEMO.put(key, probe.localCheckpoint(eager=True), probe)
-    return cached
-
-
+#: session memos of the registry rows (functions/index_base.INDEX_ROWS).
+#: Each row registers its original probe plan as an eviction extra: the
+#: eager checkpoint's plan no longer references the batch's lazy
+#: pre-explode checkpoint hiding in the probe's lineage, and the memo
+#: must free those blocks too
+_CONTIDX_MEMO = CheckpointMemo()
 _CONTMRG_MEMO = CheckpointMemo()
 
 
-@query(
-    "contamination_index_merge",
-    oracle=_monolithic_oracle(f"doc_id % {_BENCH_MOD} = 0"),
-)
-def contamination_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shard-parallel gram-index build + metadata merge ≡ monolithic
-    build: the held-out set (doc_id % 50 == 0) is indexed as TWO
-    disjoint shard indexes — even multiples of 50 and odd multiples —
-    the second folded into the first with
-    :func:`merge_contamination_index` (no re-tokenization), then the
-    training batch probes the merged index. Oracle = the same
-    monolithic decontamination recompute as
-    `contamination_incremental_index`, proving the fold is invisible on
-    the probe surface."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CONTMRG_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        stem = index_table_name(
-            "contmrg", spark.sparkContext.applicationId, sf_dir
-        )
-        bench = docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
-        dst = build_contamination_index(
-            spark,
-            bench.filter(F.col("doc_id") % (2 * _BENCH_MOD) == 0),
-            tempfile.mkdtemp(prefix=f"{stem}a_"),
-            f"{stem}a",
-        )
-        src = build_contamination_index(
-            spark,
-            bench.filter(F.col("doc_id") % (2 * _BENCH_MOD) != 0),
-            tempfile.mkdtemp(prefix=f"{stem}b_"),
-            f"{stem}b",
-        )
-        merge_contamination_index(spark, dst, src)
-        probe = check_batch_contamination(
-            spark, docs.filter(F.col("doc_id") % _BENCH_MOD != 0), dst
-        )
-        cached = _CONTMRG_MEMO.put(key, probe.localCheckpoint(eager=True), probe)
-    return cached
+def _probe(spark: SparkSession, batch: DataFrame, grams_table: str):
+    probe = check_batch_contamination(spark, batch, grams_table)
+    return probe, (probe,)
 
 
-#: post-delete split: bench docs with doc_id % (2·_BENCH_MOD) == 0 are
-#: retracted — half the held-out set (always a subset of the bench set)
-_DELETE_PRED = f"doc_id % {2 * _BENCH_MOD} = 0"
-
-
-@query(
-    "contamination_index_post_delete",
-    oracle=_monolithic_oracle(
-        f"doc_id % {_BENCH_MOD} = 0 AND NOT ({_DELETE_PRED})"
+# benchmark = doc_id % 50 == 0 (indexed once per session), training
+# batch = the rest (probed); the oracle is the monolithic recompute — the
+# same SQL as `contamination_ngram_overlap` — proving the index path
+# result-identical while paying only O(batch) per probe
+(
+    contamination_incremental_index,
+    contamination_index_merge,
+    contamination_index_post_delete,
+    contamination_index_post_ttl,
+) = register_index_rows(IndexFamily(
+    spec=CONTAMINATION_GRAMS,
+    memo=_CONTIDX_MEMO,
+    merge_memo=_CONTMRG_MEMO,
+    corpus=f"doc_id % {_BENCH_MOD} = 0",
+    batch=f"doc_id % {_BENCH_MOD} != 0",
+    load=lambda spark, sf_dir: load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
     ),
-)
-def contamination_index_post_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 deletion parity (VERDICT r8 #2): retract half the held-out
-    set (doc_id % 100 == 0) from the built index, then probe. Oracle =
-    from-scratch recompute on the surviving bench docs — grams unique
-    to retracted docs must stop flagging, shared grams must keep
-    flagging, which only the attributed (doc_id, gram) schema can
-    answer."""
-    key = (spark.sparkContext.applicationId, sf_dir, "post_delete")
-    cached = _CONTIDX_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        name = index_table_name(
-            "contidxd", spark.sparkContext.applicationId, sf_dir
-        )
-        table = build_contamination_index(
-            spark,
-            docs.filter(F.col("doc_id") % _BENCH_MOD == 0),
-            tempfile.mkdtemp(prefix=f"{name}_"),
-            name,
-        )
-        delete_from_contamination_index(
-            spark,
-            table,
-            docs.filter(F.expr(_DELETE_PRED)).select("doc_id"),
-        )
-        probe = check_batch_contamination(
-            spark, docs.filter(F.col("doc_id") % _BENCH_MOD != 0), table
-        )
-        cached = _CONTIDX_MEMO.put(key, probe.localCheckpoint(eager=True), probe)
-    return cached
-
-
-@query(
-    "contamination_index_post_ttl",
-    oracle=_monolithic_oracle(
-        f"doc_id % {_BENCH_MOD} = 0 AND"
-        f" (doc_id % {2 * _BENCH_MOD} <> 0 OR doc_id % {4 * _BENCH_MOD} = 0)"
+    build=lambda spark, sf_dir, docs, path, name, stamp, whole: (
+        build_contamination_index(spark, docs, path, name, stamp=stamp)
     ),
-)
-def contamination_index_post_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 TTL parity (round 11 — the gram-index analog of
-    `dedup_index_post_ttl`): the held-out set is ingested in two
-    stamped phases (doc_id % 100 == 0 at stamp 0, the % 100 == 50 rest
-    at stamp 1), one old slice (% 200 == 0, a subset of the stamp-0
-    docs) is RE-STAMPED at 1 — latest-stamp-wins refresh — and
-    everything whose latest stamp predates 1 is expired. The oracle is
-    the monolithic decontamination recompute over exactly the unexpired
-    bench docs (% 100 == 50 ∪ % 200 == 0): grams carried only by
-    expired benchmarks must stop flagging training docs, refreshed and
-    newer benchmarks must keep flagging."""
-    key = (spark.sparkContext.applicationId, sf_dir, "post_ttl")
-    cached = _CONTIDX_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        name = index_table_name(
-            "contidxt", spark.sparkContext.applicationId, sf_dir
-        )
-        bench = docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
-        table = build_contamination_index(
-            spark,
-            bench.filter(F.col("doc_id") % (2 * _BENCH_MOD) == 0),
-            tempfile.mkdtemp(prefix=f"{name}_"),
-            name,
-            stamp=0,
-        )
-        extend_contamination_index(
-            spark,
-            table,
-            bench.filter(F.col("doc_id") % (2 * _BENCH_MOD) != 0),
-            stamp=1,
-        )
-        # the refreshed slice arrives again at stamp 1: only its stamp
-        # ledger row is new (its gram rows are already indexed) — an
-        # index mutation all the same, so it holds the writer lock
-        with single_writer(spark, table, op="refresh"):
-            record_stamps(
-                spark,
-                table,
-                bench.filter(F.col("doc_id") % (4 * _BENCH_MOD) == 0).select(
-                    "doc_id"
-                ),
-                stamp=1,
-            )
-        expire_contamination_index(spark, table, before_stamp=1)
-        probe = check_batch_contamination(
-            spark, docs.filter(F.col("doc_id") % _BENCH_MOD != 0), table
-        )
-        cached = _CONTIDX_MEMO.put(key, probe.localCheckpoint(eager=True), probe)
-    return cached
+    ingest=extend_contamination_index,
+    probe=_probe,
+    oracle=lambda bench: _monolithic_oracle(bench or f"doc_id % {_BENCH_MOD} = 0"),
+))

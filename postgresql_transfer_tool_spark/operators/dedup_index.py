@@ -39,31 +39,20 @@ seen, under near-duplicate equality".
 from __future__ import annotations
 
 import os
-import tempfile
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.bucketing import (
-    index_table_name,
-    write_bucketed,
-    write_bucketed_aligned,
-)
+from ..functions.bucketing import write_bucketed_aligned
 from ..functions.index_base import (
-    add_tombstones,
-    append_bucketed,
+    DEDUP_LSH,
+    IndexFamily,
     apply_tombstones,
-    check_index_format,
-    fold_side_tables,
-    expired_ids,
-    record_stamps,
-    single_writer,
+    register_index_rows,
     snapshot_before_write,
-    swap_table,
     tombstones,
-    write_index_meta,
 )
 from ..functions.memo import CheckpointMemo, unpersist_checkpoints
 from .dedup import (
@@ -78,12 +67,9 @@ from .dedup import (
     minhash_bands_from_hashed,
     shingle_arrays_from_docs,
 )
-from .registry import query
 
-#: bucket count for both index tables at fixture scale. At 100 TB size
-#: this the usual way (functions/bucketing.py guidance): buckets ≈
-#: corpus_band_rows / target_partition, typically 4-32k.
-N_INDEX_BUCKETS = 16
+#: bucket count of both index tables (the spec's constant)
+N_INDEX_BUCKETS = DEDUP_LSH.n_buckets
 
 #: registry-demo split: doc_id % BATCH_MOD == 0 is the "incoming batch",
 #: the rest is the already-indexed historical corpus (~25% / 75%).
@@ -93,25 +79,12 @@ BATCH_MOD = 4
 class DedupIndex(NamedTuple):
     """Handle to a persisted index: two catalog-registered bucketed
     tables (bucketing metadata lives in the session catalog — reading
-    the raw parquet back would lose the exchange-free join layout)."""
+    the raw parquet back would lose the exchange-free join layout).
+    The lifecycle (append, delete, expire, compact, merge) is
+    functions/index_base.DEDUP_LSH's."""
 
     bands_table: str
     shingles_table: str
-
-
-#: on-disk format contract (functions/index_base.check_index_format):
-#: verified at every probe/mutation entry, stamped at build/compact
-_FORMAT_KIND = "near_dup_lsh"
-_FORMAT_TABLES = {"bands": ["doc_id", "band_key"], "shingles": ["doc_id", "h"]}
-
-
-def _check_format(
-    spark: SparkSession, index: "DedupIndex", backfill: bool = False
-) -> None:
-    check_index_format(
-        spark, index.bands_table, _FORMAT_KIND, _FORMAT_TABLES,
-        backfill=backfill,
-    )
 
 
 class BatchDedupResult(NamedTuple):
@@ -164,7 +137,6 @@ def build_dedup_index(
     docs: DataFrame,
     path: str,
     name: str,
-    n_buckets: int = N_INDEX_BUCKETS,
     stamp: int | None = None,
 ) -> DedupIndex:
     """Persist the LSH state of ``docs`` as the two bucketed tables.
@@ -201,31 +173,22 @@ def build_dedup_index(
     Probe paths keep batch_signatures unchanged: micro-batches are
     small, and their checkpoints are reused across 2-3 plan branches
     within one epoch."""
-    par = max(
-        spark.sparkContext.defaultParallelism,
-        n_buckets,
-    )
+    par = max(spark.sparkContext.defaultParallelism, N_INDEX_BUCKETS)
     pre = shingle_arrays_from_docs(docs).repartition(par, F.col("doc_id"))
     sh = pre.select("doc_id", F.explode("shingles").alias("s"))
     hashed = _spark_hashed_from(sh).select("doc_id", "h").distinct()
     idx = DedupIndex(f"{name}_bands", f"{name}_shingles")
     write_bucketed_aligned(
         hashed, idx.shingles_table, os.path.join(path, "shingles"),
-        "doc_id", n_buckets,
+        "doc_id", N_INDEX_BUCKETS,
     )
     persisted = spark.table(idx.shingles_table)
     bands = minhash_bands_from_hashed(persisted)
     write_bucketed_aligned(
         bands, idx.bands_table, os.path.join(path, "bands"),
-        "band_key", n_buckets,
+        "band_key", N_INDEX_BUCKETS,
     )
-    if stamp is not None:
-        record_stamps(
-            spark, idx.bands_table, persisted.select("doc_id").distinct(),
-            stamp,
-        )
-    write_index_meta(path, _FORMAT_KIND, _FORMAT_TABLES)
-    return idx
+    return DEDUP_LSH.seal(spark, idx, path, stamp)
 
 
 def _verify_hashed(cand: DataFrame, sh: DataFrame) -> DataFrame:
@@ -275,7 +238,7 @@ def dedup_batch_against_index(
     a lower-id batch doc. Sub-3-token docs have no shingles, never match
     anything (same as the monolithic pipeline), and are reported novel.
     """
-    _check_format(spark, index)
+    DEDUP_LSH.check(spark, index)
     b_hashed, b_bands, pre = batch_signatures(batch_docs)
     # retracted docs (takedowns/TTL) are anti-joined out via broadcast —
     # the index side keeps its bucketed partitioning, so the candidate
@@ -377,7 +340,7 @@ def dedup_slice_against_inclusive_index(
     Returns (novel_ids, checkpoints); the caller owns the checkpoints'
     blocks. Sub-shingle docs match nothing and are reported novel, as
     everywhere else."""
-    _check_format(spark, index)
+    DEDUP_LSH.check(spark, index)
     b_hashed, b_bands, pre = batch_signatures(slice_docs)
     tombs = tombstones(spark, index.bands_table)
     idx_bands = apply_tombstones(spark.table(index.bands_table), tombs, "doc_id")
@@ -422,7 +385,6 @@ def extend_dedup_index(
     spark: SparkSession,
     index: DedupIndex,
     result: BatchDedupResult,
-    n_buckets: int = N_INDEX_BUCKETS,
     stamp: int | None = None,
 ) -> None:
     """Append the NOVEL batch docs' band/shingle rows to the index
@@ -432,37 +394,26 @@ def extend_dedup_index(
     bucket, so batch cadence × bucket count bounds file count (compact
     periodically at high cadence, like any bucketed CDC sink).
 
-    Both append relations are MATERIALIZED before either write:
-    ``novel_ids``'s lazy plan reads the index tables themselves, so
-    evaluating it after the first append would see the batch's own
-    freshly written rows, self-match them, and silently shrink the
-    second append to nothing (read-your-own-writes; caught by
-    tests/test_dedup_index.py's two-batch flow).
+    Both append relations are MATERIALIZED under the writer lock before
+    either write: ``novel_ids``'s lazy plan reads the index tables
+    themselves, so evaluating it after the first append would see the
+    batch's own freshly written rows, self-match them, and silently
+    shrink the second append to nothing (read-your-own-writes; caught
+    by tests/test_dedup_index.py's two-batch flow).
 
     ``stamp``: optional logical ingest stamp for the novel ids — the
     TTL substrate (:func:`expire_dedup_index`). None skips the stamp
-    write entirely (no extra job for pipelines that never expire).
+    write entirely (no extra job for pipelines that never expire)."""
 
-    Single-writer: the whole read-snapshot → append sequence holds the
-    index write lock; a concurrent extend would interleave its appends
-    between this one's snapshot and writes (torn extend)."""
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.bands_table, op="extend"):
-        nb = snapshot_before_write(
-            result.batch_bands.join(result.novel_ids, "doc_id", "left_semi")
-        )
-        nh = snapshot_before_write(
-            result.batch_shingles.join(result.novel_ids, "doc_id", "left_semi")
-        )
-        # stamps before the data append (round-9 review): a crash in
-        # between leaves stamped-but-unindexed ids (harmless), never
-        # indexed-but-unstamped rows that TTL could no longer reach
-        if stamp is not None:
-            record_stamps(
-                spark, index.bands_table, nb.select("doc_id").distinct(), stamp
+    def novel() -> dict[str, DataFrame]:
+        return {
+            role: snapshot_before_write(rows.join(result.novel_ids, "doc_id", "left_semi"))
+            for role, rows in (
+                ("bands", result.batch_bands), ("shingles", result.batch_shingles)
             )
-        append_signature_rows(spark, index, nb, nh, n_buckets)
-    for d in (nb, nh):
+        }
+
+    for d in DEDUP_LSH.append(spark, index, novel, stamp).values():
         unpersist_checkpoints(d)
 
 
@@ -473,18 +424,15 @@ def append_all_signatures(
     shingle_rows: DataFrame,
     stamp: int | None = None,
     op: str = "extend",
-    n_buckets: int = N_INDEX_BUCKETS,
     wait: float | None = None,
 ) -> None:
     """Append the signature rows of ALL given docs — no novelty filter —
-    with the full extend contract (single-writer lock; stamps recorded
-    BEFORE the data append so a crash in between leaves
-    stamped-but-unindexed ids, never unstampable rows). ``wait``: bound
-    for the writer-lock retry — the publish phase of partitioned
-    multi-stream admission has N streams legitimately contending here
-    (streaming/multi_admission.py), and their inputs are checkpointed
-    slices, never lazy reads of the index, so waiting is safe under the
-    torn-extend analysis.
+    with the full append contract (DEDUP_LSH.append: single-writer lock,
+    stamps before the data). ``wait``: bound for the writer-lock retry —
+    the publish phase of partitioned multi-stream admission has N
+    streams legitimately contending here (streaming/multi_admission.py),
+    and their inputs are checkpointed slices, never lazy reads of the
+    index, so waiting is safe under the torn-extend analysis.
 
     This is the ingest-funnel's "seen = probed" index discipline
     (streaming/ingest_funnel.py): indexing duplicates too makes the
@@ -498,116 +446,24 @@ def append_all_signatures(
 
     The inputs must not read the index tables through a lazy plan
     (batch_signatures output never does)."""
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.bands_table, op=op, wait=wait):
-        if stamp is not None:
-            record_stamps(
-                spark, index.bands_table, bands_rows.select("doc_id").distinct(), stamp
-            )
-        append_signature_rows(spark, index, bands_rows, shingle_rows, n_buckets)
+    rows = {"bands": bands_rows, "shingles": shingle_rows}
+    DEDUP_LSH.append(spark, index, lambda: rows, stamp, op, wait)
 
 
-def append_signature_rows(
-    spark: SparkSession,
-    index: DedupIndex,
-    bands_rows: DataFrame,
-    shingle_rows: DataFrame,
-    n_buckets: int = N_INDEX_BUCKETS,
-) -> None:
-    """Low-level append of (doc_id, band_key) / (doc_id, h) rows to the
-    two index tables — functions/index_base.append_bucketed per table,
-    which also refreshes the relation cache through the CALLER's
-    session (the rows may belong to a foreachBatch epoch-clone session;
-    caught by tests/test_streaming_index_dedup.py). The inputs must NOT
-    read the index tables through a lazy plan (snapshot_before_write
-    first — see extend_dedup_index)."""
-    append_bucketed(spark, index.bands_table, bands_rows, "band_key", n_buckets)
-    append_bucketed(spark, index.shingles_table, shingle_rows, "doc_id", n_buckets)
-
-
-def merge_dedup_index(
-    spark: SparkSession,
-    dst: DedupIndex,
-    src: DedupIndex,
-    n_buckets: int = N_INDEX_BUCKETS,
-    assume_disjoint: bool = True,
-) -> None:
-    """Fold shard-built index ``src`` into ``dst`` — metadata only, no
-    document is re-shingled. A MinHash-LSH index merges EXACTLY because
-    its per-document state (band keys, shingle fingerprints) does not
-    depend on the rest of the corpus: union-of-indexes ≡
-    index-of-union, bit for bit (oracle-proved by the
-    ``dedup_index_merge`` registry row). This is the 100 TB build
-    posture: shard the corpus across independent jobs, build each
-    shard's index in parallel, then fold the metadata — the merge moves
-    O(src index) rows and never touches raw text. (The IVF family has
-    no such identity — a vector's cell depends on the trained
-    centroids, so the ANN analog of "merge" is re-assignment into the
-    destination's frozen centroid space, i.e. ``extend_ann_index``.)
-
-    ``src``'s retractions are honored at read (tombstone anti-join):
-    deleted docs are not resurrected into ``dst``. ``src``'s ingest
-    stamps are carried verbatim (functions/index_base.append_stamp_rows)
-    so TTL expiry keeps the ORIGINAL ingest times across the fold.
-    ``src`` itself is left untouched — tearing it down is the caller's
-    call (typically DROP after a verified merge).
-
-    ``assume_disjoint``: shard builds partition the document space, so
-    by default src rows append as-is. With overlapping corpora pass
-    False — src docs already present in dst are skipped wholesale
-    (anti-join on dst's distinct indexed ids; one corpus-sized join,
-    still far cheaper than re-shingling) to keep per-doc shingle counts
-    exact for Jaccard verification.
-
-    Single-writer on ``dst`` for the whole read-snapshot → append
-    sequence; the src reads are lazy but reference only src tables, so
-    the torn-extend hazard (reading your own mid-merge writes) does not
-    arise."""
-    if dst.bands_table == src.bands_table:
-        raise ValueError("merge_dedup_index: src and dst are the same index")
-    _check_format(spark, dst, backfill=True)
-    _check_format(spark, src)
-    s_tombs = tombstones(spark, src.bands_table)
-    s_bands = apply_tombstones(spark.table(src.bands_table), s_tombs, "doc_id")
-    s_sh = apply_tombstones(spark.table(src.shingles_table), s_tombs, "doc_id")
-    with single_writer(spark, dst.bands_table, op="merge"):
-        if not assume_disjoint:
-            seen = spark.table(dst.shingles_table).select("doc_id").distinct()
-            s_bands = snapshot_before_write(
-                s_bands.join(seen, "doc_id", "left_anti")
-            )
-            s_sh = snapshot_before_write(s_sh.join(seen, "doc_id", "left_anti"))
-        from ..functions.index_base import append_stamp_rows, stamp_rows
-
-        ledger = stamp_rows(spark, src.bands_table)
-        if ledger is not None:
-            live = apply_tombstones(ledger, s_tombs, "id")
-            append_stamp_rows(spark, dst.bands_table, live)
-        append_signature_rows(spark, dst, s_bands, s_sh, n_buckets)
-    if not assume_disjoint:
-        for d in (s_bands, s_sh):
-            unpersist_checkpoints(d)
+merge_dedup_index = DEDUP_LSH.merge
+delete_from_dedup_index = DEDUP_LSH.delete
+expire_dedup_index = DEDUP_LSH.expire
+compact_dedup_index = DEDUP_LSH.compact
 
 
 # ---------------------------------------------------------------------------
-# Driver surface: split the documents fixture into a historical corpus
-# (doc_id % 4 != 0) and an incoming batch (% 4 == 0); index the corpus
-# once per session, probe the batch, return the matched pairs. The
-# oracle recomputes the MONOLITHIC full-corpus LSH over all documents
-# and filters to batch-touching pairs — proving incremental ≡ full.
+# Registry rows (generated from functions/index_base.INDEX_ROWS):
+# split the documents fixture into a historical corpus (doc_id % 4 !=
+# 0) and an incoming batch (% 4 == 0); index the corpus once per
+# session, probe the batch, return the matched pairs. The oracle
+# recomputes the MONOLITHIC full-corpus LSH over all documents and
+# filters to batch-touching pairs — proving incremental ≡ full.
 # ---------------------------------------------------------------------------
-
-#: session memo for the driver query: holds the materialized matched
-#: relation plus the batch's checkpoints (registered as eviction extras
-#: because the eager matched checkpoint's plan no longer references
-#: them). The index TABLES live in the session catalog + a scratch dir;
-#: they are data-at-rest, not block-manager state, and carry no leak.
-_DDIDX_MEMO = CheckpointMemo()
-
-
-def _index_name(app_id: str, sf_dir: str) -> str:
-    return index_table_name("ddidx", app_id, sf_dir)
-
 
 def _incremental_oracle(exclude: str = "FALSE") -> str:
     """Monolithic full-recompute oracle in the fingerprint domain,
@@ -682,270 +538,46 @@ def verified_pairs_cte(exclude: str = "FALSE") -> str:
     )"""
 
 
-@query("dedup_incremental_index", oracle=_incremental_oracle())
-def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2-incremental: near-dup pairs of an incoming batch against a
-    persisted corpus index (build once per session, probe per batch).
-    The Spark side never recomputes corpus signatures at probe time;
-    the oracle proves the result equals a monolithic full recompute."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DDIDX_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-        name = _index_name(spark.sparkContext.applicationId, sf_dir)
-        index = build_dedup_index(
-            spark,
-            docs.filter(F.col("doc_id") % BATCH_MOD != 0),
-            tempfile.mkdtemp(prefix=f"{name}_"),
-            name,
-        )
-        res = dedup_batch_against_index(
-            spark, docs.filter(F.col("doc_id") % BATCH_MOD == 0), index
-        )
-        cached = _DDIDX_MEMO.put(
-            key, res.matched.localCheckpoint(eager=True), *res.checkpoints
-        )
-    return cached
-
-
-#: merge row memo — same lifecycle as _DDIDX_MEMO
+#: session memos of the registry rows: each holds the materialized
+#: matched relation plus the batch's checkpoints, registered as eviction
+#: extras because the eager matched checkpoint's plan no longer
+#: references them. The index TABLES live
+#: in the session catalog + a scratch dir; they are data-at-rest, not
+#: block-manager state, and carry no leak.
+_DDIDX_MEMO = CheckpointMemo()
 _DDMRG_MEMO = CheckpointMemo()
 
 
-@query("dedup_index_merge", oracle=_incremental_oracle())
-def dedup_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shard-parallel build + metadata merge ≡ monolithic build. The
-    corpus (doc_id % 4 != 0) is built as TWO independent shard indexes
-    — odd ids (% 2 == 1) and % 4 == 2, a disjoint partition of the
-    corpus — the second is folded into the first with
-    :func:`merge_dedup_index` (no re-shingling), and the batch
-    (% 4 == 0) probes the merged index. The oracle is the SAME
-    monolithic full-recompute as `dedup_incremental_index`, so the
-    driver proves union-of-indexes ≡ index-of-union on the probe
-    surface — the federated build story a 100 TB corpus needs (shards
-    build in parallel on separate jobs; the fold moves only index
-    metadata)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DDMRG_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-        stem = index_table_name("ddmrg", spark.sparkContext.applicationId, sf_dir)
-        dst = build_dedup_index(
-            spark,
-            docs.filter(F.col("doc_id") % 2 == 1),
-            tempfile.mkdtemp(prefix=f"{stem}a_"),
-            f"{stem}a",
-        )
-        src = build_dedup_index(
-            spark,
-            docs.filter(F.col("doc_id") % BATCH_MOD == 2),
-            tempfile.mkdtemp(prefix=f"{stem}b_"),
-            f"{stem}b",
-        )
-        merge_dedup_index(spark, dst, src)
-        res = dedup_batch_against_index(
-            spark, docs.filter(F.col("doc_id") % BATCH_MOD == 0), dst
-        )
-        cached = _DDMRG_MEMO.put(
-            key, res.matched.localCheckpoint(eager=True), *res.checkpoints
-        )
-    return cached
+def _ingest_all(spark: SparkSession, index: DedupIndex, docs: DataFrame, stamp) -> None:
+    hashed, bands, pre = batch_signatures(docs)
+    append_all_signatures(spark, index, bands, hashed, stamp=stamp)
+    for d in (hashed, bands, pre):
+        unpersist_checkpoints(d)
 
 
-#: post-delete registry split: of the indexed corpus (doc_id % 4 != 0),
-#: docs with doc_id % DELETE_MOD == 1 are retracted before the probe
-#: (% 8 == 1 ⇒ % 4 == 1 ≠ 0, so the deleted set is always indexed-only)
-DELETE_MOD = 8
+def _probe(spark: SparkSession, batch: DataFrame, index: DedupIndex):
+    res = dedup_batch_against_index(spark, batch, index)
+    return res.matched, res.checkpoints
 
 
-@query(
-    "dedup_index_post_delete",
-    oracle=_incremental_oracle(exclude=f"doc_id % {DELETE_MOD} = 1"),
-)
-def dedup_index_post_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2-incremental deletion parity (VERDICT r8 #2): build the corpus
-    index, RETRACT a split (doc_id % 8 == 1) via tombstones, probe the
-    batch. The oracle is the monolithic recompute over the SURVIVING
-    corpus — proving post-deletion probe ≡ from-scratch rebuild without
-    ever rewriting the index (the tombstone anti-join is the whole
-    deletion cost until compaction)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "post_delete")
-    cached = _DDIDX_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-        name = index_table_name(
-            "ddidxd", spark.sparkContext.applicationId, sf_dir
-        )
-        index = build_dedup_index(
-            spark,
-            docs.filter(F.col("doc_id") % BATCH_MOD != 0),
-            tempfile.mkdtemp(prefix=f"{name}_"),
-            name,
-        )
-        delete_from_dedup_index(
-            spark,
-            index,
-            docs.filter(F.col("doc_id") % DELETE_MOD == 1).select("doc_id"),
-        )
-        res = dedup_batch_against_index(
-            spark, docs.filter(F.col("doc_id") % BATCH_MOD == 0), index
-        )
-        cached = _DDIDX_MEMO.put(
-            key, res.matched.localCheckpoint(eager=True), *res.checkpoints
-        )
-    return cached
-
-
-@query(
-    "dedup_index_post_ttl",
-    oracle=_incremental_oracle(
-        exclude=f"doc_id % {DELETE_MOD} = 5 AND doc_id % {2 * DELETE_MOD} <> 13"
+(
+    dedup_incremental_index,
+    dedup_index_merge,
+    dedup_index_post_delete,
+    dedup_index_post_ttl,
+) = register_index_rows(IndexFamily(
+    spec=DEDUP_LSH,
+    memo=_DDIDX_MEMO,
+    merge_memo=_DDMRG_MEMO,
+    corpus=f"doc_id % {BATCH_MOD} != 0",
+    batch=f"doc_id % {BATCH_MOD} = 0",
+    load=lambda spark, sf_dir: load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
     ),
-)
-def dedup_index_post_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2-incremental TTL parity (VERDICT r9 #5): the stamps →
-    expired_ids → tombstones path proved end-to-end against an oracle,
-    not just unit-tested. The corpus is ingested in two stamped phases
-    (doc_id % 8 == 5 at stamp 0, the rest at stamp 1), one old slice
-    (doc_id % 16 == 13, a subset of the stamp-0 docs) is RE-INGESTED at
-    stamp 1 — the latest-stamp-wins refresh semantics — and then
-    everything whose latest stamp predates 1 is expired. The oracle is
-    the monolithic recompute over exactly the unexpired survivors
-    (closed form: drop doc_id % 8 == 5 except the refreshed % 16 == 13
-    slice), so a probe after expiry must equal a from-scratch rebuild
-    on what retention kept. Both residues are ≡ 1 (mod 4), so the
-    expired set is always corpus-only, never the probed batch."""
-    key = (spark.sparkContext.applicationId, sf_dir, "post_ttl")
-    cached = _DDIDX_MEMO.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-        name = index_table_name(
-            "ddidxt", spark.sparkContext.applicationId, sf_dir
-        )
-        corpus = docs.filter(F.col("doc_id") % BATCH_MOD != 0)
-        phase0 = corpus.filter(F.col("doc_id") % DELETE_MOD == 5)
-        index = build_dedup_index(
-            spark, phase0, tempfile.mkdtemp(prefix=f"{name}_"), name, stamp=0
-        )
-        hashed, bands, pre = batch_signatures(
-            corpus.filter(F.col("doc_id") % DELETE_MOD != 5)
-        )
-        append_all_signatures(spark, index, bands, hashed, stamp=1)
-        for d in (hashed, bands, pre):
-            unpersist_checkpoints(d)
-        # the refreshed slice arrives again at stamp 1: only its stamp
-        # ledger row is new (its signature rows are already indexed) —
-        # an index mutation all the same, so it holds the writer lock
-        with single_writer(spark, index.bands_table, op="refresh"):
-            record_stamps(
-                spark,
-                index.bands_table,
-                corpus.filter(F.col("doc_id") % (2 * DELETE_MOD) == 13).select(
-                    "doc_id"
-                ),
-                stamp=1,
-            )
-        expire_dedup_index(spark, index, before_stamp=1)
-        res = dedup_batch_against_index(
-            spark, docs.filter(F.col("doc_id") % BATCH_MOD == 0), index
-        )
-        cached = _DDIDX_MEMO.put(
-            key, res.matched.localCheckpoint(eager=True), *res.checkpoints
-        )
-    return cached
-
-
-def delete_from_dedup_index(
-    spark: SparkSession, index: DedupIndex, doc_ids: DataFrame
-) -> None:
-    """Retract documents from the index (takedowns, license changes,
-    re-crawl invalidation — VERDICT r8 #2). O(deleted): a tombstone
-    append, no index rewrite; every subsequent probe anti-joins the
-    tombstones (broadcast, exchange-free) so retracted docs match
-    nothing, exactly as if the index had been rebuilt without them
-    (oracle-proved by `dedup_index_post_delete`). Compaction folds the
-    tombstones into a physical rewrite and clears them. Retracted ids
-    stay retracted until that compaction — the globally-unique-id
-    contract means an id is never legitimately re-ingested before then."""
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.bands_table, op="delete"):
-        add_tombstones(spark, index.bands_table, doc_ids)
-
-
-def expire_dedup_index(
-    spark: SparkSession, index: DedupIndex, before_stamp: int
-) -> None:
-    """TTL expiry: retract every doc whose latest ingest stamp predates
-    ``before_stamp`` (stamps are recorded by build/extend when the
-    caller passes one). Pure composition: expired ids → tombstones —
-    the probe/compaction machinery is the deletion path's."""
-    _check_format(spark, index, backfill=True)
-    with single_writer(spark, index.bands_table, op="expire"):
-        ids = expired_ids(spark, index.bands_table, before_stamp)
-        add_tombstones(spark, index.bands_table, ids)
-
-
-def compact_dedup_index(
-    spark: SparkSession,
-    index: DedupIndex,
-    new_path: str,
-    n_buckets: int = N_INDEX_BUCKETS,
-) -> dict[str, tuple[int, int]]:
-    """Rewrite both index tables into ONE file per bucket, physically
-    dropping tombstoned docs, then clear the tombstone/stamp relations.
-
-    Every :func:`extend_dedup_index` appends up to one file per
-    non-empty bucket, so file count grows with batch cadence — the
-    classic small-files decay of any bucketed CDC sink. Plain
-    directory compaction (functions/layout.compact) would destroy the
-    bucket layout; instead each table is re-written bucketed on its own
-    key after repartitioning on the EXPLICIT bucket-id expression
-    ``pmod(hash(key), n_buckets)`` — verified identical to the writer's
-    bucket assignment — so every bucket's rows land whole in one task
-    and the writer emits exactly one file per non-empty bucket.
-    (Repartitioning on the raw key column is NOT enough: the write-side
-    plan re-arranges rows so tasks end up holding several buckets each,
-    one file per (task, bucket).)
-    The rewrite lands at ``new_path`` (reading the live table while
-    overwriting its own location is not safe), then the catalog entry
-    is swapped rename-aside (functions/index_base.swap_table — every
-    failure window recoverable); the old generation's directory is the
-    caller's scratch to reclaim.
-
-    Returns {table: (files_before, files_after)}.
-    """
-    _check_format(spark, index, backfill=True)
-    out: dict[str, tuple[int, int]] = {}
-    with single_writer(spark, index.bands_table, op="compact"):
-        tombs = tombstones(spark, index.bands_table)
-        for table, key, sub in (
-            (index.bands_table, "band_key", "bands"),
-            (index.shingles_table, "doc_id", "shingles"),
-        ):
-            before = len(spark.table(table).inputFiles())
-            tmp = f"{table}_compacting"
-            bucket_id = F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
-            write_bucketed(
-                apply_tombstones(spark.table(table), tombs, "doc_id").repartition(
-                    n_buckets, bucket_id
-                ),
-                tmp,
-                os.path.join(new_path, sub),
-                key,
-                n_buckets,
-            )
-            swap_table(spark, table, tmp)
-            out[table] = (before, len(spark.table(table).inputFiles()))
-        # deletions are physical now: tombstones spent, stamps kept
-        # for survivors (TTL must work across generations)
-        fold_side_tables(spark, index.bands_table, new_path)
-        write_index_meta(new_path, _FORMAT_KIND, _FORMAT_TABLES)
-    return out
+    build=lambda spark, sf_dir, docs, path, name, stamp, whole: build_dedup_index(
+        spark, docs, path, name, stamp=stamp
+    ),
+    ingest=_ingest_all,
+    probe=_probe,
+    oracle=lambda exclude: _incremental_oracle(exclude or "FALSE"),
+))

@@ -1013,10 +1013,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the session-memoized PQ INDEX (_pq_index — at 100 TB the vectors
     live in cold storage and the hot working set is the n·PQ_M bytes of
     codes this memo holds; the bench's cold pass re-pays the full
-    train + encode build). Encoding is a literal-codebook projection
-    fused into the corpus scan — no explode, no broadcast build, no
-    aggregation exchange (the r14 shape paid a broadcast join plus a
-    (vec_id, m) shuffle per call). ADC joins the posexploded code table
+    train + encode build). Encoding is the map-side Arrow pandas UDF
+    :func:`_pq_encode_udf` (one numpy matmul per batch and subspace,
+    codebook held in memory as bounded data) applied in the corpus scan —
+    no explode, no broadcast build, no aggregation exchange (a join-based
+    encode pays a broadcast join plus a (vec_id, m) shuffle per call).
+    ADC joins the posexploded code table
     against the (tiny, broadcast) query partial-dot table on (m, code)
     — the corpus's full vectors are only touched for the PQ_CAND
     re-rank rows per query. Recall measured in

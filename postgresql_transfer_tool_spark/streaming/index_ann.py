@@ -43,13 +43,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.index_base import ANN_IVF
 from ..functions.memo import unpersist_checkpoints
-from ..operators.ann_index import (
-    AnnIndex,
-    compact_ann_index,
-    extend_ann_index,
-    N_CELL_BUCKETS,
-)
+from ..operators.ann_index import AnnIndex, extend_ann_index
 from .maintenance import MaintenancePolicy, run_maintenance
 from .exactly_once import (
     EpochLedger,
@@ -150,10 +146,7 @@ class AnnIndexSink:
             # post-commit maintenance (streaming/maintenance.py)
             run_maintenance(
                 self.spark, self.maintenance, int(epoch_id),
-                indexes=[(
-                    self.index.cells_table, N_CELL_BUCKETS,
-                    lambda p: compact_ann_index(self.spark, self.index, p),
-                )],
+                indexes=[ANN_IVF.maintenance(self.spark, self.index)],
                 ledger=self.ledger,
                 record_dirs=[self.ingested_dir],
             )

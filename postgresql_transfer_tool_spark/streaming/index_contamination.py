@@ -35,11 +35,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.contamination_index import (
-    compact_contamination_index,
-    extend_contamination_index,
-    N_GRAM_BUCKETS,
-)
+from ..functions.index_base import CONTAMINATION_GRAMS
+from ..operators.contamination_index import extend_contamination_index
 from .maintenance import MaintenancePolicy, run_maintenance
 from .exactly_once import (
     EpochLedger,
@@ -109,12 +106,7 @@ class ContaminationIndexSink:
             # cadence (streaming/maintenance.py)
             run_maintenance(
                 self.spark, self.maintenance, int(epoch_id),
-                indexes=[(
-                    self.grams_table, N_GRAM_BUCKETS,
-                    lambda p: compact_contamination_index(
-                        self.spark, self.grams_table, p
-                    ),
-                )],
+                indexes=[CONTAMINATION_GRAMS.maintenance(self.spark, self.grams_table)],
                 ledger=self.ledger,
                 record_dirs=[self.ingested_dir],
             )

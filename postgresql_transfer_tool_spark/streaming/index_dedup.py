@@ -58,16 +58,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.index_base import record_stamps, single_writer
+from ..functions.index_base import DEDUP_LSH
 from ..functions.memo import unpersist_checkpoints
 from ..operators.dedup_index import (
-    append_signature_rows,
+    append_all_signatures,
     batch_signatures,
-    compact_dedup_index,
     DedupIndex,
     dedup_batch_against_index,
     extend_dedup_index,
-    N_INDEX_BUCKETS,
 )
 from .maintenance import MaintenancePolicy, run_maintenance
 from .exactly_once import (
@@ -198,27 +196,13 @@ class DedupIndexSink:
             )
             if missing.limit(1).count():
                 m_hashed, m_bands, m_pre = batch_signatures(missing)
-                # same contract as extend_dedup_index (round-9 ADVICE
-                # #1): the repair is an index mutation, so it holds the
-                # single-writer lock, and it records the stamps BEFORE
-                # the data append — a crash in between leaves
-                # stamped-but-unindexed ids (harmless; a later replay
-                # re-runs this branch), never indexed-but-unstamped
-                # rows that expire_dedup_index could no longer reach.
-                # Duplicate stamp rows across replays are inert: expiry
-                # reads MAX(stamp) per id.
-                with single_writer(
-                    self.spark, self.index.bands_table, op="replay-repair"
-                ):
-                    record_stamps(
-                        self.spark,
-                        self.index.bands_table,
-                        m_bands.select("doc_id").distinct(),
-                        stamp=int(epoch_id),
-                    )
-                    append_signature_rows(
-                        self.spark, self.index, m_bands, m_hashed
-                    )
+                # an ordinary stamped append (writer lock, stamps before
+                # the data — DEDUP_LSH.append); duplicate stamp rows
+                # across replays are inert: expiry reads MAX(stamp) per id
+                append_all_signatures(
+                    self.spark, self.index, m_bands, m_hashed,
+                    stamp=int(epoch_id), op="replay-repair",
+                )
                 for d in (m_hashed, m_bands, m_pre):
                     unpersist_checkpoints(d)
             unpersist_checkpoints(missing)
@@ -254,10 +238,7 @@ class DedupIndexSink:
             return
         run_maintenance(
             self.spark, self.maintenance, epoch_id,
-            indexes=[(
-                self.index.bands_table, N_INDEX_BUCKETS,
-                lambda p: compact_dedup_index(self.spark, self.index, p),
-            )],
+            indexes=[DEDUP_LSH.maintenance(self.spark, self.index)],
             ledger=self.ledger,
             record_dirs=[self.admitted_dir, self.pairs_dir],
         )

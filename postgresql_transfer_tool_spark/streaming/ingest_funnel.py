@@ -78,20 +78,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.index_base import ANN_IVF, DEDUP_LSH
 from ..functions.memo import unpersist_checkpoints
-from ..operators.ann_index import (
-    compact_ann_index,
-    extend_ann_index,
-    N_CELL_BUCKETS,
-)
+from ..operators.ann_index import extend_ann_index
 from ..operators.contamination_index import check_batch_contamination
 from ..operators.dedup_index import (
     append_all_signatures,
     batch_signatures,
-    compact_dedup_index,
     DedupIndex,
     dedup_batch_against_index,
-    N_INDEX_BUCKETS,
 )
 from ..operators.ingest import (
     apply_embedding_stage,
@@ -394,16 +389,10 @@ class IngestFunnelSink:
         pinned by tests/test_streaming_maintenance.py)."""
         if self.maintenance is None:
             return
-        indexes = [(
-            self.index.bands_table, N_INDEX_BUCKETS,
-            lambda p: compact_dedup_index(self.spark, self.index, p),
-        )]
+        indexes = [DEDUP_LSH.maintenance(self.spark, self.index)]
         retrain = None
         if self.grow_ann:
-            indexes.append((
-                self.ann_index.cells_table, N_CELL_BUCKETS,
-                lambda p: compact_ann_index(self.spark, self.ann_index, p),
-            ))
+            indexes.append(ANN_IVF.maintenance(self.spark, self.ann_index))
             if (
                 self.maintenance.max_cell_imbalance is not None
                 or self.maintenance.max_mean_cell_fill is not None

@@ -140,7 +140,8 @@ def run_maintenance(
     """The post-commit maintenance pass every sink shares.
 
     ``indexes``: (any_index_table, n_buckets, compact_fn) per index the
-    sink writes; ``compact_fn(new_path)`` runs the kind-specific
+    sink writes — ``IndexKind.maintenance`` (functions/index_base.py)
+    builds the entry; ``compact_fn(new_path)`` runs the kind's
     compaction (which takes the writer lock itself). ``record_dirs``:
     the sink's per-epoch record roots, pruned together under one
     retention cutoff. ``state_dirs``: per-epoch STATE record roots

@@ -184,7 +184,7 @@ def test_compaction_folds_tombstones_and_preserves_results(spark):
 
         files_b, files_a = compact_ann_index(
             spark, index, tempfile.mkdtemp(prefix=f"{name}_g2")
-        )
+        )[index.cells_table]
         assert files_a <= files_b
         left = {r.vec_id for r in spark.table(index.cells_table)
                 .select("vec_id").distinct().collect()}

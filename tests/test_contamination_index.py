@@ -174,7 +174,7 @@ def test_compaction_folds_deletions_and_replay_duplicates(spark):
 
         files_before, files_after = compact_contamination_index(
             spark, table, tempfile.mkdtemp(prefix=f"{name}_gen2")
-        )
+        )[table]
         assert files_after <= files_before
         # physical: deleted doc's rows gone, duplicates collapsed
         assert spark.table(table).count() == 2
