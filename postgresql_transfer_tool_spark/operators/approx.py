@@ -269,7 +269,7 @@ HASH_SAMPLE_K = 5
 )
 def stratified_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling by cryptographic hash rank: per
-    language stratum, the {HASH_SAMPLE_K} documents with the smallest
+    language stratum, the HASH_SAMPLE_K = 5 documents with the smallest
     md5(doc_id). Unlike RNG-based sampling (``stratified_sample``,
     rows-only — seed semantics are engine-specific), the hash rank is
     identical in every engine and every run, so this variant is

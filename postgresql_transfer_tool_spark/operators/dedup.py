@@ -1012,7 +1012,7 @@ def dedup_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: fingerprint extraction is map-only (text.winnow_fps_df);
     the explode shuffles (doc_id, fp) pairs keyed by 64-bit fingerprint;
-    the document-frequency cap ({WINNOW_DF_CAP}) drops boilerplate
+    the document-frequency cap (WINNOW_DF_CAP = 10) drops boilerplate
     fingerprints so every equi-join bucket holds <= cap rows — the same
     bounded-bucket argument as the banded MinHash-LSH pipeline, with no
     O(n²) anywhere. Jaccard over fingerprint sets is exact on the kept

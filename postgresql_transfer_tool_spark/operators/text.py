@@ -508,7 +508,7 @@ def winnow_fp_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (SIGMOD'03): md5-prefix hashes of
-    character {K}-grams, minimum per sliding window of {W} hashes,
+    character 5-grams (WINNOW_K), minimum per sliding window of 4 hashes (WINNOW_W),
     deduplicated. Entirely map-side array expressions — no explode, no
     shuffle — so at 100 TB fingerprint extraction runs at scan speed and
     only the (doc_id, fingerprint-set summary) survives. The distinct

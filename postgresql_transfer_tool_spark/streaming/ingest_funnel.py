@@ -102,6 +102,7 @@ from ..operators.multimodal import (
     repair_media_fp_index,
 )
 from .maintenance import MaintenancePolicy, run_maintenance
+from .source_budget import SourceBudget
 from .exactly_once import (
     EpochLedger,
     epoch_collision_error,
@@ -180,31 +181,25 @@ class IngestFunnelSink:
         self.decisions_dir = os.path.join(out_dir, "decisions")
         self.ledger = EpochLedger(os.path.join(out_dir, "_epochs"))
         self.maintenance = maintenance
-        #: per-source token budget carried ACROSS epochs (round 11):
-        #: when set, batches must carry a ``source`` column, decisions
-        #: gain it, and ``admitted`` additionally requires the doc's
-        #: first token to fit its source's remaining budget — the
-        #: budget state (one tiny (source, cum_tokens) row per source)
-        #: is persisted per epoch under ``_budget`` and rebuilt from
-        #: the decision records if a crash loses it, so the gate is
-        #: epoch-cut-invariant and exactly-once like everything else.
-        #: An int is a UNIFORM cap; a (source, budget_tokens) DataFrame
-        #: (round 12 — weighted data mixes) caps each source at its own
-        #: budget, e.g. floor(mix_weight × total) from
-        #: operators/ingest.source_weight_budgets. The state machine is
-        #: identical either way — only the per-source threshold differs
-        self.source_budget = source_budget
-        #: adaptive carry-over mode (round 13 — VERDICT #5): when True,
-        #: ``source_budget`` is a PER-EPOCH allotment rather than a
-        #: total — the cap applied at epoch k is (k+1)×allotment, so a
-        #: source that under-fills early epochs implicitly carries its
-        #: unmet budget forward (cumulative-allotment formulation: no
-        #: extra state beyond the existing per-source cum_tokens; the
-        #: carry is the gap between the rising cap and the persisted
-        #: consumption). Requires the stream's contiguous 0-based
-        #: epoch numbering, which foreachBatch guarantees.
-        self.budget_per_epoch = budget_per_epoch
-        self.budget_dir = os.path.join(out_dir, "_budget")
+        #: per-source token budget carried ACROSS epochs
+        #: (streaming/source_budget.SourceBudget): when set, batches
+        #: must carry a ``source`` column, decisions gain it, and
+        #: ``admitted`` additionally requires the doc's first token to
+        #: fit its source's remaining budget. An int is a UNIFORM cap; a
+        #: (source, budget_tokens) DataFrame caps each source at its own
+        #: budget (operators/ingest.source_weight_budgets).
+        #: ``budget_per_epoch`` makes it a per-epoch allotment with
+        #: carry-over: the cap at epoch k is (k+1)×allotment.
+        self.budget = (
+            None
+            if source_budget is None
+            else SourceBudget(
+                spark, source_budget, self.ledger,
+                os.path.join(out_dir, "_budget"),
+                lambda: [self.decisions_dir],
+                per_epoch=budget_per_epoch,
+            )
+        )
         #: cross-modal media stage (round 13 — VERDICT #3): when set,
         #: each epoch's docs additionally probe the persistent media
         #: fingerprint table (equality-bucketed, seen = probed), the
@@ -297,12 +292,12 @@ class IngestFunnelSink:
                     repair_media_fp_index(
                         self.spark, self.media_index, prior, batch_df
                     )
-                if self.source_budget is not None:
+                if self.budget is not None:
                     # the budget-state record is derived from the
                     # decision record, so a crash between the two
                     # writes is repaired by recomputing it (idempotent
                     # overwrite after a post-state crash)
-                    self._write_budget_state(prior, int(epoch_id))
+                    self.budget.write_state(prior, int(epoch_id))
             finally:
                 unpersist_checkpoints(prior)
             self.ledger.commit(int(epoch_id))
@@ -336,15 +331,11 @@ class IngestFunnelSink:
                     self.spark, batch_df, self.media_index
                 )
                 decisions = apply_media_stage(decisions, m_novel)
-            if self.source_budget is not None:
-                decisions = self._apply_budget(decisions, batch_df, int(epoch_id))
+            if self.budget is not None:
+                decisions = self.budget.apply(decisions, batch_df, int(epoch_id))
             write_epoch_record(decisions, epoch_dir)
-            if self.source_budget is not None:
-                rec = read_epoch_record(self.spark, epoch_dir)
-                try:
-                    self._write_budget_state(rec, int(epoch_id))
-                finally:
-                    unpersist_checkpoints(rec)
+            if self.budget is not None:
+                self.budget.record_state(epoch_dir, int(epoch_id))
             append_all_signatures(
                 self.spark,
                 self.index,
@@ -417,133 +408,8 @@ class IngestFunnelSink:
             # the long streams retention targets; each record already
             # carries the accumulated totals, so pruning old ones loses
             # nothing the gate reads (round-12 ADVICE)
-            state_dirs=(
-                [self.budget_dir] if self.source_budget is not None else []
-            ),
+            state_dirs=[self.budget.state_dir] if self.budget is not None else [],
             retrain=retrain,
-        )
-
-    # -- per-source token budget (round 11) -------------------------------
-    def _budget_state(self, epoch_id: int) -> DataFrame:
-        """(source, cum_tokens) admitted BEFORE this epoch — the state
-        record of the newest committed epoch below ``epoch_id``, or an
-        empty frame when the stream is young. If that record was lost
-        (crash, or retention without archiving), the state is rebuilt
-        from the surviving decision records — O(history), logged, and
-        only ever paid on a rare recovery path."""
-        import logging
-
-        committed = [e for e in self.ledger.committed() if e < epoch_id]
-        empty = self.spark.createDataFrame(
-            [], "source string, cum_tokens bigint"
-        )
-        if not committed:
-            return empty
-        last = max(committed)
-        state = read_epoch_record(
-            self.spark, os.path.join(self.budget_dir, f"epoch={last}")
-        )
-        if state is not None:
-            return state
-        logging.getLogger(__name__).warning(
-            "budget state record for epoch %d is missing — rebuilding "
-            "from the decision records (slow path; if retention pruned "
-            "them, arm MaintenancePolicy.archive_root or keep the "
-            "_budget dir)", last,
-        )
-        try:
-            dec = self.decisions()
-        except Exception:
-            return empty
-        return (
-            dec.filter(F.col("admitted") & (F.col("epoch") <= last))
-            .groupBy("source")
-            .agg(F.sum("n_tokens").cast("bigint").alias("cum_tokens"))
-        )
-
-    def _apply_budget(
-        self, decisions: DataFrame, batch_df: DataFrame, epoch_id: int
-    ) -> DataFrame:
-        """Re-derive ``admitted`` with the budget conjunct: a
-        funnel-admitted doc is taken iff its FIRST token fits its
-        source's remaining budget — preceding tokens = the persisted
-        cross-epoch state plus lower-id admitted docs of this batch
-        (the same first-token-lands rule as sequence packing, and
-        epoch-cut-invariant under id-ordered epochs: earlier epochs'
-        admitted tokens are exactly the state). Decisions gain the
-        ``source`` column; all other evidence columns are untouched."""
-        from pyspark.sql.window import Window
-
-        prior = self._budget_state(epoch_id)
-        pre = decisions.join(batch_df.select("doc_id", "source"), "doc_id")
-        w = Window.partitionBy("source").orderBy("doc_id")
-        scored = (
-            pre.filter(F.col("admitted"))
-            .select("doc_id", "source", "n_tokens")
-            .withColumn(
-                "cum_local", F.sum("n_tokens").over(w) - F.col("n_tokens")
-            )
-            .join(F.broadcast(prior), "source", "left")
-        )
-        if isinstance(self.source_budget, int):
-            cap = F.lit(self.source_budget)
-        else:
-            # weighted mix (round 12): per-source caps from the
-            # dimension-sized (source, budget_tokens) lookup; a source
-            # absent from the mix gets budget 0 — unknown domains are
-            # refused, not silently uncapped
-            scored = scored.join(
-                F.broadcast(self.source_budget), "source", "left"
-            )
-            cap = F.coalesce("budget_tokens", F.lit(0))
-        if self.budget_per_epoch:
-            cap = cap * F.lit(int(epoch_id) + 1)
-        in_budget = scored.filter(
-            F.col("cum_local") + F.coalesce("cum_tokens", F.lit(0)) < cap
-        ).select("doc_id")
-        cols = [c for c in decisions.columns if c != "admitted"]
-        # both broadcast sides are bounded by construction: the prior
-        # state is one row per source (dimension-sized), and in_budget
-        # is a subset of ONE micro-batch's ids — epoch size is
-        # operator-controlled, the standard streaming-broadcast bound
-        # (unlike the batch queries, where the admitted set is
-        # data-proportional and hints are forbidden)
-        out = pre.join(
-            F.broadcast(in_budget.withColumn("in_budget", F.lit(True))),
-            "doc_id",
-            "left",
-        )
-        return out.select(
-            *cols,
-            "source",
-            (F.col("admitted") & F.coalesce("in_budget", F.lit(False))).alias(
-                "admitted"
-            ),
-        )
-
-    def _write_budget_state(self, decisions_record: DataFrame, epoch_id: int) -> None:
-        """state(N) = state(N-1) + this epoch's admitted tokens per
-        source (derived from the FINAL decision record, so replay
-        recomputation is bit-identical); one tiny row per source,
-        written rename-aside like every record."""
-        prior = self._budget_state(epoch_id)
-        this = (
-            decisions_record.filter(F.col("admitted"))
-            .groupBy("source")
-            .agg(F.sum("n_tokens").cast("bigint").alias("t"))
-        )
-        new = (
-            prior.join(this, "source", "full")
-            .select(
-                "source",
-                (
-                    F.coalesce("cum_tokens", F.lit(0))
-                    + F.coalesce("t", F.lit(0))
-                ).cast("bigint").alias("cum_tokens"),
-            )
-        )
-        write_epoch_record(
-            new, os.path.join(self.budget_dir, f"epoch={epoch_id}")
         )
 
     def _repair_ann(self, prior: DataFrame, epoch_id: int) -> None:

@@ -96,27 +96,14 @@ from .exactly_once import (
     verify_committed_replay,
     write_epoch_record,
 )
-
-
-def _has_committed_parquet(d: str) -> bool:
-    """True when ``d`` holds at least one parquet part file anywhere
-    below it. Distinguishes the one LEGITIMATE empty shape — a stream
-    dir created but no epoch committed yet — from a corrupt or
-    schema-drifted decisions dir, whose read errors must propagate
-    loudly instead of silently zeroing the budget basis (round-13
-    ADVICE)."""
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            if f.endswith(".parquet"):
-                return True
-    return False
+from .source_budget import read_decision_dirs, SourceBudget
 
 
 class _Stream(NamedTuple):
     idx: int
     decisions_dir: str
     ledger: EpochLedger
-    budget_dir: str
+    budget: SourceBudget | None  # the stream's budget gate, state under s{i}/_budget
 
 
 class PartitionedFunnelStreams:
@@ -195,12 +182,19 @@ class PartitionedFunnelStreams:
         retired streams' durable state."""
         s = self._stream_cache.get(i)
         if s is None:
-            s = _Stream(
-                i,
-                os.path.join(self.out_dir, f"s{i}", "decisions"),
-                EpochLedger(os.path.join(self.out_dir, f"s{i}", "_epochs")),
-                os.path.join(self.out_dir, f"s{i}", "_budget"),
-            )
+            root = os.path.join(self.out_dir, f"s{i}")
+            ledger = EpochLedger(os.path.join(root, "_epochs"))
+            budget = None
+            if self.source_budget is not None:
+                # rebuilds read EVERY stream dir that ever existed: a
+                # source's pre-re-shard history lives in its former
+                # owner's dir, and slices are disjoint per epoch, so the
+                # union counts each admission exactly once
+                budget = SourceBudget(
+                    self.spark, self.source_budget, ledger,
+                    os.path.join(root, "_budget"), self._all_decisions_dirs,
+                )
+            s = _Stream(i, os.path.join(root, "decisions"), ledger, budget)
             self._stream_cache[i] = s
         return s
 
@@ -361,10 +355,8 @@ class PartitionedFunnelStreams:
                 ):
                     raise epoch_collision_error(epoch_id, committed=False)
                 persist_fp()
-                if self.source_budget is not None:
-                    self._write_budget_state(
-                        stream, prior, epoch_id, changed_at
-                    )
+                if stream.budget is not None:
+                    stream.budget.write_state(prior, epoch_id, changed_at)
             finally:
                 unpersist_checkpoints(prior)
             stream.ledger.commit(epoch_id)
@@ -376,134 +368,20 @@ class PartitionedFunnelStreams:
         cont = check_batch_contamination(self.spark, slice_df, self.grams_table)
         try:
             decisions = funnel_decisions(slice_df, novel, cont)
-            if self.source_budget is not None:
-                decisions = self._apply_budget(
-                    stream, decisions, slice_df, epoch_id, changed_at
+            if stream.budget is not None:
+                # the cached per-stream state is valid only while slice
+                # ownership has been stable since it was written: a
+                # re-shard moves sources between streams
+                decisions = stream.budget.apply(
+                    decisions, slice_df, epoch_id, changed_at
                 )
             write_epoch_record(decisions, epoch_dir)
-            if self.source_budget is not None:
-                rec = read_epoch_record(self.spark, epoch_dir)
-                try:
-                    self._write_budget_state(stream, rec, epoch_id, changed_at)
-                finally:
-                    unpersist_checkpoints(rec)
+            if stream.budget is not None:
+                stream.budget.record_state(epoch_dir, epoch_id, changed_at)
             stream.ledger.commit(epoch_id)
         finally:
             for d in (*checkpoints, cont):
                 unpersist_checkpoints(d)
-
-    # -- per-stream budget gate (round 12: the stateful per-source cap,
-    # horizontally scaled — slice_by='source' makes each stream own its
-    # sources' cross-epoch token state, so the gate below is the SAME
-    # state machine as IngestFunnelSink's (ingest_funnel.py:_apply_budget
-    # / _budget_state / _write_budget_state), scoped to the stream's
-    # dirs; no cross-stream coordination exists or is needed ------------
-    def _budget_state(
-        self, stream: _Stream, epoch_id: int, changed_at: int
-    ) -> DataFrame:
-        empty = self.spark.createDataFrame(
-            [], "source string, cum_tokens bigint"
-        )
-        if epoch_id == 0:
-            return empty
-        committed = [e for e in stream.ledger.committed() if e < epoch_id]
-        last = max(committed) if committed else None
-        # The per-stream cached state is valid only while slice
-        # OWNERSHIP has been stable since it was written: a re-shard at
-        # any epoch > last moves sources between streams, and a state
-        # record that predates it misses (or double-claims) the moved
-        # sources' history (round 13 — dynamic re-sharding).
-        if last is not None and last >= changed_at:
-            state = read_epoch_record(
-                self.spark, os.path.join(stream.budget_dir, f"epoch={last}")
-            )
-            if state is not None:
-                return state
-        # Rebuild from the decision records — across EVERY stream dir
-        # that ever existed (a source's pre-re-shard history lives in
-        # its former owner's dir; slices are disjoint per epoch, so the
-        # union counts each admission exactly once). Only the two
-        # legitimate "no decisions yet" shapes contribute nothing: dir
-        # absent, or present but holding no parquet part files. Any
-        # OTHER read error (corrupt footer, drifted schema) propagates
-        # loudly — swallowing it would silently under-count consumption
-        # and over-admit against the budget (round-13 ADVICE).
-        parts = []
-        for d in self._all_decisions_dirs():
-            if not os.path.isdir(d) or not _has_committed_parquet(d):
-                continue  # no committed epoch yet — legitimately empty
-            parts.append(self.spark.read.option("basePath", d).parquet(d))
-        if not parts:
-            return empty
-        dec = parts[0]
-        for p_ in parts[1:]:
-            dec = dec.unionByName(p_)
-        return (
-            dec.filter(F.col("admitted") & (F.col("epoch") < epoch_id))
-            .groupBy("source")
-            .agg(F.sum("n_tokens").cast("bigint").alias("cum_tokens"))
-        )
-
-    def _apply_budget(
-        self, stream: _Stream, decisions: DataFrame, slice_df: DataFrame,
-        epoch_id: int, changed_at: int,
-    ) -> DataFrame:
-        from pyspark.sql.window import Window
-
-        prior = self._budget_state(stream, epoch_id, changed_at)
-        pre = decisions.join(slice_df.select("doc_id", "source"), "doc_id")
-        w = Window.partitionBy("source").orderBy("doc_id")
-        scored = (
-            pre.filter(F.col("admitted"))
-            .select("doc_id", "source", "n_tokens")
-            .withColumn(
-                "cum_local", F.sum("n_tokens").over(w) - F.col("n_tokens")
-            )
-            .join(F.broadcast(prior), "source", "left")
-        )
-        if isinstance(self.source_budget, int):
-            cap = F.lit(self.source_budget)
-        else:
-            scored = scored.join(
-                F.broadcast(self.source_budget), "source", "left"
-            )
-            cap = F.coalesce("budget_tokens", F.lit(0))
-        in_budget = scored.filter(
-            F.col("cum_local") + F.coalesce("cum_tokens", F.lit(0)) < cap
-        ).select("doc_id")
-        cols = [c for c in decisions.columns if c != "admitted"]
-        out = pre.join(
-            F.broadcast(in_budget.withColumn("in_budget", F.lit(True))),
-            "doc_id",
-            "left",
-        )
-        return out.select(
-            *cols,
-            "source",
-            (F.col("admitted") & F.coalesce("in_budget", F.lit(False))).alias(
-                "admitted"
-            ),
-        )
-
-    def _write_budget_state(
-        self, stream: _Stream, decisions_record: DataFrame, epoch_id: int,
-        changed_at: int,
-    ) -> None:
-        prior = self._budget_state(stream, epoch_id, changed_at)
-        this = (
-            decisions_record.filter(F.col("admitted"))
-            .groupBy("source")
-            .agg(F.sum("n_tokens").cast("bigint").alias("t"))
-        )
-        new = prior.join(this, "source", "full").select(
-            "source",
-            (
-                F.coalesce("cum_tokens", F.lit(0)) + F.coalesce("t", F.lit(0))
-            ).cast("bigint").alias("cum_tokens"),
-        )
-        write_epoch_record(
-            new, os.path.join(stream.budget_dir, f"epoch={epoch_id}")
-        )
 
     # -- read-back ---------------------------------------------------------
     def committed(self) -> set[int]:
@@ -530,17 +408,10 @@ class PartitionedFunnelStreams:
         merged relation. Raises a descriptive error when NO stream has
         committed an epoch yet (round-13 ADVICE: not a bare IndexError),
         and lets read errors from a non-empty dir propagate."""
-        parts = []
-        for d in self._all_decisions_dirs():
-            if not os.path.isdir(d) or not _has_committed_parquet(d):
-                continue
-            parts.append(self.spark.read.option("basePath", d).parquet(d))
-        if not parts:
+        out = read_decision_dirs(self.spark, self._all_decisions_dirs())
+        if out is None:
             raise FileNotFoundError(
                 f"no decisions committed under {self.out_dir!r} — run at "
                 "least one epoch before reading back decisions()"
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         return out

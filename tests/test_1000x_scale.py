@@ -462,7 +462,7 @@ def test_ingest_funnel_1000x(spark, x1000_dir, x1000_emb_dir, x1000_index):
 
     # budget-state read-back is dimension-sized: one row per source
     srcs = batch.select("source").distinct().count()
-    state = sink._budget_state(n_epochs)
+    state = sink.budget.state(n_epochs)
     assert state.count() <= srcs
     for t in (gtable, ann.cells_table, ann.centroids_table,
               f"contidx_x1000{tag}_tombstones",

@@ -27,6 +27,7 @@ from postgresql_transfer_tool_spark.streaming.multi_admission import (
 
     PartitionedFunnelStreams,
 )
+from postgresql_transfer_tool_spark.streaming.source_budget import SourceBudget
 
 # r15 (VERDICT r14 #2): this suite is wall-clock heavy (streaming
 # triggers / index write generations / full-registry sweep) and made
@@ -193,13 +194,13 @@ def test_partitioned_source_sliced_budget_gate(spark, tmp_path, monkeypatch):
     # crash between the decisions write and the budget-state write,
     # then replay: the state record is recomputed from the durable
     # record and the refusals hold
-    real = PartitionedFunnelStreams._write_budget_state
+    real = SourceBudget.write_state
     def boom(self, *a, **k):
         raise RuntimeError("injected crash before budget state")
-    monkeypatch.setattr(PartitionedFunnelStreams, "_write_budget_state", boom)
+    monkeypatch.setattr(SourceBudget, "write_state", boom)
     with pytest.raises(RuntimeError, match="injected"):
         coord(docs([(410, _text(37), "B"), (411, _text(38), "B")]), 2)
-    monkeypatch.setattr(PartitionedFunnelStreams, "_write_budget_state", real)
+    monkeypatch.setattr(SourceBudget, "write_state", real)
     coord(docs([(410, _text(37), "B"), (411, _text(38), "B")]), 2)
     assert coord.committed() == {0, 1, 2}
     d = {r.doc_id: r.admitted for r in coord.decisions().collect()}
@@ -270,50 +271,6 @@ def test_partitioned_streams_via_real_readstream(spark, tmp_path):
     }
     assert by_id == {500: True, 501: False}
     _drop(spark, index, gtable)
-
-
-def test_budget_state_corrupt_decisions_fail_loud(spark, tmp_path):
-    """Round-13 ADVICE: _budget_state's fallback caught bare Exception,
-    so a corrupt/unreadable decisions dir silently became zero prior
-    token state and the budget gate could re-admit past the cap. Only
-    the two legitimate empty shapes return empty; real read errors
-    propagate."""
-    from pyspark.errors import AnalysisException
-
-    from postgresql_transfer_tool_spark.streaming.exactly_once import (
-        EpochLedger,
-    )
-    from postgresql_transfer_tool_spark.streaming.multi_admission import (
-        _Stream,
-        PartitionedFunnelStreams,
-    )
-
-    sink = object.__new__(PartitionedFunnelStreams)
-    sink.spark = spark
-    sink.out_dir = str(tmp_path)
-    sdir = tmp_path / "s0"
-    stream = _Stream(
-        0,
-        str(sdir / "decisions"),
-        EpochLedger(str(sdir / "_epochs")),
-        str(sdir / "_budget"),
-    )
-    stream.ledger.commit(0)  # a committed prior epoch, no budget record
-
-    # absent decisions dir: legitimately empty state
-    assert sink._budget_state(stream, 1, changed_at=0).count() == 0
-
-    # dir exists but holds no parquet yet: also legitimately empty
-    (sdir / "decisions").mkdir(parents=True)
-    assert sink._budget_state(stream, 1, changed_at=0).count() == 0
-
-    # corrupt parquet: must raise, not silently zero the budget state
-    ep = sdir / "decisions" / "epoch=0"
-    ep.mkdir(parents=True)
-    (ep / "part-0000.parquet").write_text("garbage not parquet")
-    with pytest.raises(Exception) as ei:
-        sink._budget_state(stream, 1, changed_at=0).count()
-    assert not isinstance(ei.value, AnalysisException)
 
 
 def test_reshard_mid_run_decisions_equal_batch_funnel(spark, tmp_path):
@@ -489,6 +446,10 @@ def test_corrupt_decisions_dir_propagates_loudly(spark, tmp_path):
         st = coord._stream(0)
         # changed_at > last committed epoch forces the rebuild-from-
         # decisions path (the cached per-stream state is ownership-stale)
-        coord._budget_state(st, 5, 3).count()
+        gate = SourceBudget(
+            spark, 0, st.ledger, str(tmp_path / "unused"),
+            coord._all_decisions_dirs,
+        )
+        gate.state(5, 3).count()
     assert "IndexError" not in type(ei.value).__name__
     _drop(spark, index, gtable)

@@ -625,17 +625,17 @@ def test_source_budget_state_across_epochs_and_crashes(spark, tmp_path, monkeypa
 
     # crash between decisions write and state write of epoch 2: replay
     # must repair the state record and the budget must still hold
-    from postgresql_transfer_tool_spark.streaming import ingest_funnel as mod
+    from postgresql_transfer_tool_spark.streaming.source_budget import SourceBudget
 
-    real = IngestFunnelSink._write_budget_state
+    real = SourceBudget.write_state
     def boom(self, *a, **k):
         raise RuntimeError("injected crash before budget state")
-    monkeypatch.setattr(IngestFunnelSink, "_write_budget_state", boom)
+    monkeypatch.setattr(SourceBudget, "write_state", boom)
     wave2 = [(410, _text(36), "B"), (411, _text(37), "B")]
     with pytest.raises(RuntimeError, match="injected"):
         sink(docs_with_source(wave2), 2)
     assert sink.ledger.committed() == {0, 1}
-    monkeypatch.setattr(IngestFunnelSink, "_write_budget_state", real)
+    monkeypatch.setattr(SourceBudget, "write_state", real)
     sink(docs_with_source(wave2), 2)  # replay: repair + commit
     assert sink.ledger.committed() == {0, 1, 2}
     d = {r.doc_id: r.admitted for r in sink.decisions().collect()}
